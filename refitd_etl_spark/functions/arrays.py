@@ -59,16 +59,3 @@ def stored_indices(all_urls: Column, chosen: Column) -> Column:
     Reference: src/pipeline.py:289-295.
     """
     return F.transform(chosen, lambda u: F.array_position(all_urls, u).cast("int") - 1)
-
-
-def added_removed_unchanged(orig: Column, corr: Column) -> Column:
-    """U2/D1 core: per-row set algebra between two string arrays →
-    struct(added, removed, unchanged), each sorted for determinism.
-
-    Reference: src/utils/tag_comparison.py:101-112.
-    """
-    return F.struct(
-        F.array_sort(F.array_except(corr, orig)).alias("added"),
-        F.array_sort(F.array_except(orig, corr)).alias("removed"),
-        F.array_sort(F.array_intersect(orig, corr)).alias("unchanged"),
-    )

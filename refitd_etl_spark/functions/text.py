@@ -34,15 +34,6 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def word_tokens(text: Column) -> Column:
-    """BPE-ish tokenization: runs of letters or of digits (lowercased)."""
-    return F.regexp_extract_all(F.lower(text), F.lit("[a-z]+|[0-9]+"), 0)
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def stopword_ratio_toks(toks: Column, lang: str = "en") -> Column:
     """`stopword_ratio` over a pre-tokenized (lowercased) array column.
 

@@ -102,7 +102,15 @@ def run_pipeline(
                 F.col("price_current"),
             ),
         )
-        final = with_embeddings(embed_src, embedder=embedder).drop("embed_text")
+        # ONE eager materialization feeds all three writes: mapInPandas
+        # is opaque to pruning, so each write would otherwise re-run the
+        # sensor and embedder — and re-read the tracking files that the
+        # tracking upsert swaps out
+        final = (
+            with_embeddings(embed_src, embedder=embedder)
+            .drop("embed_text")
+            .localCheckpoint(eager=True)
+        )
 
         # LOAD (S7/S8/S11): MERGE into products + tracking; JSON metadata
         sinks.upsert_parquet(spark, products_path, final, key="product_id")

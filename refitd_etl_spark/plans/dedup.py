@@ -330,17 +330,35 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count, value-identical labels (pinned by the oracle and
     tests/test_dedup_convergence.py).
     """
-    from pyspark.sql import Observation
-
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = table(spark, sf_dir, "documents").select("doc_id")
+    return label_propagation_components(docs, pairs)
+
+
+CC_MAX_ROUNDS = 50  # round cap of both connected-components loops
+
+
+class ComponentsDidNotConverge(RuntimeError):
+    """A connected-components loop reached its round cap."""
+
+
+def label_propagation_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The min-label propagation loop behind `dedup_clusters`, factored
+    like `largestar_components`: `docs` = (doc_id), `pairs` =
+    (doc_a, doc_b) undirected; returns (doc_id, cluster_id,
+    is_canonical). One job per round, and (component diameter + 1)
+    rounds to converge; past `CC_MAX_ROUNDS` it raises
+    `ComponentsDidNotConverge` — chain-shaped components that long
+    belong on the O(log n)-round `largestar_components`."""
+    from pyspark.sql import Observation
+
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .localCheckpoint()
     )
     labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint()
-    while True:
+    for _ in range(CC_MAX_ROUNDS):
         nbr_min = (
             edges.join(
                 labels.select(F.col("doc_id").alias("src"), F.col("cluster_id").alias("src_lbl")),
@@ -366,8 +384,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         labels = new_labels.drop("_changed")
         if not obs.get["n_changed"]:
-            break
-    return labels.withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+            return labels.withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+    raise ComponentsDidNotConverge(
+        f"label propagation did not converge in {CC_MAX_ROUNDS} rounds"
+    )
 
 
 @query(
@@ -446,7 +466,7 @@ def largestar_components(
     def sym(e: DataFrame) -> DataFrame:
         return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    for _round in range(50):
+    for _round in range(CC_MAX_ROUNDS):
         s = sym(edges)
         # LARGE-STAR: every node links its strictly-greater neighbors
         # to min(neighborhood ∪ self)
@@ -496,7 +516,9 @@ def largestar_components(
                 stats["rounds"] = _round + 1
             break
     else:
-        raise RuntimeError("large-star/small-star did not converge in 50 rounds")
+        raise ComponentsDidNotConverge(
+            f"large-star/small-star did not converge in {CC_MAX_ROUNDS} rounds"
+        )
 
     nbr_min = sym(edges).groupBy(F.col("u").alias("doc_id")).agg(
         F.min("v").alias("nmin")

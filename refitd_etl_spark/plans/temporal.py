@@ -1967,30 +1967,3 @@ def weekly_distinct_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= 0.05
         ).alias("union_within_5pct"),
     )
-
-
-def weekly_distinct_sketch_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UN-gated diagnostics twin of `weekly_distinct_sketch_union`
-    (the sketch-drift debugging pattern): raw union estimates and
-    relative error per week — run this when the 5% boolean flips."""
-    e = table(spark, sf_dir, "events").select(
-        F.date_trunc("week", F.date_trunc("day", F.col("ts"))).alias("week"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-        "user_id",
-    )
-    daily = e.groupBy("week", "day").agg(F.hll_sketch_agg("user_id").alias("sk"))
-    weekly = daily.groupBy("week").agg(
-        F.count("*").alias("n_days_merged"),
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"),
-    )
-    exact = e.groupBy("week").agg(F.countDistinct("user_id").alias("exact_users"))
-    return exact.join(weekly, "week").select(
-        F.date_format("week", "yyyy-MM-dd").alias("week"),
-        "n_days_merged",
-        "exact_users",
-        "est",
-        (
-            F.abs(F.col("est").cast("double") - F.col("exact_users").cast("double"))
-            / F.col("exact_users").cast("double")
-        ).alias("rel_err"),
-    )

@@ -21,6 +21,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical RAM, in whole GiB (at least 1g): the
+    local-mode JVM shares the box with its Python workers and the OS,
+    so a heap sized past RAM gets the JVM killed rather than collected.
+    ``SPARK_DRIVER_MEM`` overrides it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "refitd-etl-spark",
     shuffle_partitions: int | None = None,
@@ -39,7 +48,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # local-mode metastore/warehouse for bucketed tables; a cluster

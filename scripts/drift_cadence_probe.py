@@ -14,7 +14,7 @@ addition: the gate docstring claims the pq_drift_delta_arm pattern
 "applies unchanged" — this is the proof by measurement.
 
 Store builds happen inside each arm's untimed warm-up (the memoized
-`*_path` builders), so timed numbers are pure audit cost, the gate's
+`_pq_store` builder), so timed numbers are pure audit cost, the gate's
 cadence. Timing: per-arm clearCache + uniform min-of-3 (the r13
 protocol). Checkpoints the partial record after each phase (the r15
 lesson — a killed session must still leave its numbers).
@@ -42,7 +42,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from refitd_etl_spark.functions import vectors as V
     from refitd_etl_spark.plans import ALL_QUERIES
     from refitd_etl_spark.plans import similarity as sim
     from refitd_etl_spark.session import get_spark
@@ -113,7 +112,7 @@ def main() -> None:
     # both batch-table arms
     batch_dir = os.path.join(SCRATCH, f"drift_cadence_batch_x{n}")
     shutil.rmtree(batch_dir, ignore_errors=True)
-    store = sim.pq_trained_store_path(spark, scaled_dir)
+    store = sim._pq_store(spark, scaled_dir, sim.IVF_PQ_TRAINED_STORE)
     (
         sim._pq_append_delta(sim.table(spark, scaled_dir, "embeddings"))
         .select("vec_id", "embedding")
@@ -140,23 +139,12 @@ def main() -> None:
     ckpt()
 
     # the COARSE gate's batch-table cadence arm (the r15 addition)
-    pcent_n = spark.read.parquet(store + "/centroids").withColumn(
-        "_cnorm", V.norm(F.col("c_emb"))
-    )
+    pcent = spark.read.parquet(store + "/centroids")
 
     def _coarse_batch_audit():
         rows = spark.read.parquet(batch_dir)
-        best_cos = (
-            rows.select("vec_id", "embedding")
-            .withColumn("_vnorm", V.norm(F.col("embedding")))
-            .crossJoin(F.broadcast(pcent_n))
-            .withColumn(
-                "_cos",
-                V.dot(F.col("embedding"), F.col("c_emb"))
-                / (F.col("_vnorm") * F.col("_cnorm")),
-            )
-            .groupBy("vec_id")
-            .agg(F.max("_cos").alias("_cos"))
+        best_cos = sim._km_assign(
+            rows.select("vec_id", "embedding"), pcent, with_cos=True
         )
         return (
             best_cos.agg(

@@ -37,7 +37,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from refitd_etl_spark.functions import vectors as V
     from refitd_etl_spark.plans import ALL_QUERIES
     from refitd_etl_spark.plans import similarity as sim
     from refitd_etl_spark.session import get_spark
@@ -77,10 +76,10 @@ def main() -> None:
     # index-build (offline) cost, reported but not part of serving time
     for tag, d in (("1x", sf_dir), (f"{n}x", scaled_dir)):
         t0 = time.perf_counter()
-        sim.pq_codes_path(spark, d)
+        sim._pq_store(spark, d, sim.PQ_CODES)
         out[f"codes_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        sim.pq_ivf_codes_path(spark, d)
+        sim._pq_store(spark, d, sim.PQ_IVF_CODES)
         out[f"ivf_codes_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         ckpt()
 
@@ -90,7 +89,7 @@ def main() -> None:
     # ~1/PQ_APPEND_MOD of the corpus, never all of it.
     for tag, d in (("1x", sf_dir), (f"{n}x", scaled_dir)):
         t0 = time.perf_counter()
-        sim.pq_codes_append_path(spark, d)
+        sim._pq_store(spark, d, sim.PQ_CODES_APPEND)
         out[f"append_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         ckpt()
 
@@ -112,10 +111,10 @@ def main() -> None:
     # the seed flat store / one-shot IVF store costs above.
     for tag, d in (("1x", sf_dir), (f"{n}x", scaled_dir)):
         t0 = time.perf_counter()
-        sim.pq_trained_codes_path(spark, d)
+        sim._pq_store(spark, d, sim.PQ_TRAINED_CODES)
         out[f"trained_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        sim.pq_ivf_append_codes_path(spark, d)
+        sim._pq_store(spark, d, sim.PQ_IVF_APPEND_CODES)
         out[f"ivf_append_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         ckpt()
 
@@ -148,7 +147,7 @@ def main() -> None:
     # above — measuring the persisted artifact, and never paying the
     # training job twice in one probe run (r11 code review)
     cb_full = spark.read.parquet(
-        sim.pq_trained_codes_path(spark, sf_dir) + "/codebook"
+        sim._pq_store(spark, sf_dir, sim.PQ_TRAINED_CODES) + "/codebook"
     )
     for name, cb in (
         ("seed", sim._pq_seed_cb_d(e_full)),
@@ -162,13 +161,15 @@ def main() -> None:
 
     # r12: the FULLY-trained two-level store (trained coarse centroids
     # x trained sub-codebooks, append-built cid x snap). Build cost
-    # includes BOTH training jobs plus the two snapshot encodes — the
-    # offline price the serve numbers amortize; the serve itself
+    # is the coarse training plus the two snapshot encodes (the
+    # sub-codebook artifact was trained once, for the trained-codes
+    # store above) — the offline price the serve numbers amortize;
+    # the serve itself
     # should sit at the composed-store price (probe pruning works the
     # same on trained cids as on seed cids).
     for tag, d in (("1x", sf_dir), (f"{n}x", scaled_dir)):
         t0 = time.perf_counter()
-        sim.pq_trained_store_path(spark, d)
+        sim._pq_store(spark, d, sim.IVF_PQ_TRAINED_STORE)
         out[f"trained_store_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         ckpt()
 
@@ -237,7 +238,7 @@ def main() -> None:
     # number the docstring could previously only argue.
     batch_dir = os.path.join(SCRATCH, f"drift_batch_x{n}")
     shutil.rmtree(batch_dir, ignore_errors=True)
-    store = sim.pq_trained_store_path(spark, scaled_dir)
+    store = sim._pq_store(spark, scaled_dir, sim.IVF_PQ_TRAINED_STORE)
     (
         sim._pq_append_delta(sim.table(spark, scaled_dir, "embeddings"))
         .select("vec_id", "embedding")
@@ -271,23 +272,12 @@ def main() -> None:
     # from the store artifact, norms hoisted exactly as the registered
     # gate hoists them, and the profile row must equal the full
     # audit's delta row bit-for-bit.
-    pcent_n = spark.read.parquet(store + "/centroids").withColumn(
-        "_cnorm", V.norm(F.col("c_emb"))
-    )
+    pcent = spark.read.parquet(store + "/centroids")
 
     def _coarse_batch_audit():
         rows = spark.read.parquet(batch_dir)
-        best_cos = (
-            rows.select("vec_id", "embedding")
-            .withColumn("_vnorm", V.norm(F.col("embedding")))
-            .crossJoin(F.broadcast(pcent_n))
-            .withColumn(
-                "_cos",
-                V.dot(F.col("embedding"), F.col("c_emb"))
-                / (F.col("_vnorm") * F.col("_cnorm")),
-            )
-            .groupBy("vec_id")
-            .agg(F.max("_cos").alias("_cos"))
+        best_cos = sim._km_assign(
+            rows.select("vec_id", "embedding"), pcent, with_cos=True
         )
         return best_cos.agg(
             F.count("*").alias("n_vectors"),

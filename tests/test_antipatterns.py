@@ -87,7 +87,9 @@ CROSSJOIN_BUDGET = {
     # serve + composed-store serve (broadcast 1-row LUT each)
     # r12 +1: ivf_pq_trained_store_serving (broadcast 1-row LUT over
     # the probe-pruned candidate scan)
-    "plans/similarity.py": 27,
+    # -6: the six code-store serves share one `_serve_pq` LUT cross
+    # join, and the coarse drift audit assigns through `_km_assign`
+    "plans/similarity.py": 21,
     "plans/temporal.py": 4,
     "plans/textops.py": 4,
 }

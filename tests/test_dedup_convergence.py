@@ -88,3 +88,35 @@ def test_symmetric_difference_emptiness_matches_exceptall(spark):
         )
         two_jobs = a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
         assert one_job == two_jobs, (a_pairs, b_pairs)
+
+
+def _chain(spark, n):
+    docs = spark.range(n).select(F.col("id").alias("doc_id"))
+    pairs = spark.range(n - 1).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    return docs, pairs
+
+
+def test_label_propagation_converges_within_its_cap(spark, monkeypatch):
+    """A chain of n nodes has diameter n-1: n rounds suffice, and every
+    node gets the chain's minimum id."""
+    from refitd_etl_spark.plans import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 6)
+    docs, pairs = _chain(spark, 6)
+    rows = dedup.label_propagation_components(docs, pairs).collect()
+    assert sorted((r.doc_id, r.cluster_id) for r in rows) == [(i, 0) for i in range(6)]
+
+
+def test_label_propagation_raises_past_its_cap(spark, monkeypatch):
+    """A chain longer than the round cap fails loudly with the named
+    error instead of looping on."""
+    import pytest
+
+    from refitd_etl_spark.plans import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 4)
+    docs, pairs = _chain(spark, 10)
+    with pytest.raises(dedup.ComponentsDidNotConverge, match="4 rounds"):
+        dedup.label_propagation_components(docs, pairs)

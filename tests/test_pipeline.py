@@ -70,3 +70,53 @@ def test_search_and_export_compose_off_store(spark, store):
     examples = build_training_examples(records)
     assert examples.count() == 6
     assert all(r["est_tokens"] > 0 for r in examples.collect())
+
+
+def test_models_run_once_per_representative(spark, tmp_path):
+    """The sensor sees each variant group's representative exactly once
+    and the embedder each new product exactly once, although the
+    curated rows feed three writes (products, tracking, metadata)."""
+    from refitd_etl_spark.operators.sensor import MockEmbedder, MockTagSensor
+    from refitd_etl_spark.operators.transform import transform_products
+
+    sensor_rows = spark.sparkContext.accumulator(0)
+    embed_rows = spark.sparkContext.accumulator(0)
+
+    class CountingSensor(MockTagSensor):
+        def tag_batch(self, batch):
+            sensor_rows.add(len(batch))
+            return super().tag_batch(batch)
+
+    class CountingEmbedder(MockEmbedder):
+        def embed_batch(self, texts):
+            embed_rows.add(len(texts))
+            return super().embed_batch(texts)
+
+    bronze = bronze_fixture(spark)
+    reps = (
+        transform_products(bronze)
+        .select(F.coalesce("parent_product_id", "product_id"))
+        .distinct()
+        .count()
+    )
+    r = run_pipeline(
+        spark, bronze, str(tmp_path), sensor=CountingSensor(), embedder=CountingEmbedder()
+    )
+    assert sensor_rows.value == reps
+    assert embed_rows.value == r.n_new == 6
+
+
+def test_incremental_run_with_new_products(spark, tmp_path):
+    """A run over a store that already tracks part of the batch tags
+    and writes only the new products — and succeeds: the metadata write
+    must not re-read tracking files the tracking upsert replaced."""
+    from refitd_etl_spark.operators.fixtures import BRONZE_FIXTURE_ROWS, BRONZE_SCHEMA
+
+    first = spark.createDataFrame(BRONZE_FIXTURE_ROWS[:4], schema=BRONZE_SCHEMA)
+    base = run_pipeline(spark, first, str(tmp_path))
+    again = run_pipeline(spark, bronze_fixture(spark), str(tmp_path))
+    assert 0 < again.n_new < again.n_candidates == 6
+    assert again.n_new == 6 - base.n_new
+    assert again.products.count() == again.tracking.count() == 6
+    meta = spark.read.json(str(tmp_path / "metadata"))
+    assert meta.select("product_id").distinct().count() == again.n_new

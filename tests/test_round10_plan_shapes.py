@@ -115,8 +115,9 @@ def test_append_encodes_only_the_delta(spark, sf_dir):
         _pq_append_base,
         _pq_append_delta,
         _pq_codebook_flat,
+        PQ_CODES_APPEND,
         _pq_encode,
-        pq_codes_append_path,
+        _pq_store,
     )
     from refitd_etl_spark.sources.registry import table
 
@@ -145,7 +146,7 @@ def test_append_encodes_only_the_delta(spark, sf_dir):
     ), "\n".join(filter_lines) or plan
     assert delta_codes.count() == n_delta
 
-    store = spark.read.parquet(pq_codes_append_path(spark, sf_dir))
+    store = spark.read.parquet(_pq_store(spark, sf_dir, PQ_CODES_APPEND) + "/codes")
     by_snap = {r["snap"]: r["cnt"] for r in
                store.groupBy("snap").agg(F.count("*").alias("cnt")).collect()}
     assert by_snap == {0: n_base, 1: n_delta}, by_snap

@@ -54,13 +54,14 @@ def test_trained_store_codes_reconstruct_strictly_better(spark, sf_dir):
     artifacts instead of an inline re-derivation.)"""
     from refitd_etl_spark.functions import vectors as V
     from refitd_etl_spark.plans.similarity import (
+        PQ_CODES,
         PQ_M,
         PQ_SUB,
+        PQ_TRAINED_CODES,
         _codebook_block,
         _pq_codebook_flat,
         _pq_flat_row,
-        pq_codes_path,
-        pq_trained_codes_path,
+        _pq_store,
     )
     from refitd_etl_spark.sources.registry import table
 
@@ -82,13 +83,14 @@ def test_trained_store_codes_reconstruct_strictly_better(spark, sf_dir):
             .first()["mse"]
         )
 
-    tp = pq_trained_codes_path(spark, sf_dir)
+    tp = _pq_store(spark, sf_dir, PQ_TRAINED_CODES)
     trained_mse = store_mse(
         spark.read.parquet(tp + "/codes"),
         _pq_flat_row(spark.read.parquet(tp + "/codebook")),
     )
     seed_mse = store_mse(
-        spark.read.parquet(pq_codes_path(spark, sf_dir)), _pq_codebook_flat(e)
+        spark.read.parquet(_pq_store(spark, sf_dir, PQ_CODES) + "/codes"),
+        _pq_codebook_flat(e),
     )
     assert trained_mse < seed_mse, (
         f"trained store mse {trained_mse} not below seed {seed_mse}"
@@ -105,9 +107,10 @@ def test_composed_store_prunes_cid_and_snap(spark, sf_dir):
     inline ivf_pq_topk and the one-shot store (shared oracle),
     engine-side."""
     from refitd_etl_spark.plans.similarity import (
+        PQ_IVF_APPEND_CODES,
         _pq_append_base,
         _pq_append_delta,
-        pq_ivf_append_codes_path,
+        _pq_store,
     )
     from refitd_etl_spark.sources.registry import table
 
@@ -119,7 +122,7 @@ def test_composed_store_prunes_cid_and_snap(spark, sf_dir):
     assert "dynamicpruning" in plan.lower(), plan
 
     e = table(spark, sf_dir, "embeddings")
-    store = spark.read.parquet(pq_ivf_append_codes_path(spark, sf_dir))
+    store = spark.read.parquet(_pq_store(spark, sf_dir, PQ_IVF_APPEND_CODES) + "/codes")
     audit = store.filter(F.col("snap") == 1)
     audit_plan = audit._jdf.queryExecution().executedPlan().toString()
     pf = [ln for ln in audit_plan.splitlines() if "PartitionFilters" in ln]
@@ -139,16 +142,17 @@ def test_composed_store_prunes_cid_and_snap(spark, sf_dir):
 
 def test_composed_store_rows_match_one_shot_build(spark, sf_dir):
     """The append-built composed store holds row-for-row the SAME
-    (vec_id, cid, codes) as the one-shot `pq_ivf_codes_path` build —
+    (vec_id, cid, codes) as the one-shot `PQ_IVF_CODES` build —
     incremental construction changes the write schedule, never the
     artifact."""
     from refitd_etl_spark.plans.similarity import (
-        pq_ivf_append_codes_path,
-        pq_ivf_codes_path,
+        PQ_IVF_APPEND_CODES,
+        PQ_IVF_CODES,
+        _pq_store,
     )
 
-    inc = spark.read.parquet(pq_ivf_append_codes_path(spark, sf_dir))
-    one = spark.read.parquet(pq_ivf_codes_path(spark, sf_dir))
+    inc = spark.read.parquet(_pq_store(spark, sf_dir, PQ_IVF_APPEND_CODES) + "/codes")
+    one = spark.read.parquet(_pq_store(spark, sf_dir, PQ_IVF_CODES) + "/codes")
     k = lambda r: r[0]
     inc_rows = sorted(
         ((r["vec_id"], r["cid"], tuple(r["codes"])) for r in inc.collect()), key=k

@@ -66,7 +66,7 @@ def test_fully_trained_store_serve_plan_trains_nothing(spark, sf_dir):
 
 def test_fully_trained_store_delta_append_reads_delta_only(spark, sf_dir):
     """The trained-store ingest invariant (VERDICT r11 item 3): the
-    delta batch is encoded by `_pq_trained_encode_batch` against the
+    delta batch is encoded by `_pq_encode_batch` against the
     PERSISTED artifacts — its lineage scans the embeddings slice plus
     the two artifact parquets, never the base `/codes` store and never
     a training iteration (no ExistingRDD) — and the snap partitions
@@ -74,16 +74,19 @@ def test_fully_trained_store_delta_append_reads_delta_only(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from refitd_etl_spark.plans.similarity import (
+        IVF_PQ_TRAINED_STORE,
         _pq_append_base,
         _pq_append_delta,
-        _pq_trained_encode_batch,
-        pq_trained_store_path,
+        _pq_encode_batch,
+        _pq_store,
     )
     from refitd_etl_spark.sources.registry import table
 
     e = table(spark, sf_dir, "embeddings")
-    path = pq_trained_store_path(spark, sf_dir)
-    delta_job = _pq_trained_encode_batch(spark, path, _pq_append_delta(e))
+    path = _pq_store(spark, sf_dir, IVF_PQ_TRAINED_STORE)
+    delta_job = _pq_encode_batch(
+        spark, e, path, IVF_PQ_TRAINED_STORE, _pq_append_delta(e)
+    )
     plan = delta_job._jdf.queryExecution().executedPlan().toString()
     assert "/codes" not in plan, plan
     assert "ExistingRDD" not in plan and "Scan rdd" not in plan, plan
@@ -106,15 +109,18 @@ def test_fully_trained_store_rows_match_one_shot_full_encode(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from refitd_etl_spark.plans.similarity import (
-        _pq_trained_encode_batch,
-        pq_trained_store_path,
+        IVF_PQ_TRAINED_STORE,
+        _pq_encode_batch,
+        _pq_store,
     )
     from refitd_etl_spark.sources.registry import table
 
     e = table(spark, sf_dir, "embeddings")
-    path = pq_trained_store_path(spark, sf_dir)
+    path = _pq_store(spark, sf_dir, IVF_PQ_TRAINED_STORE)
     inc = spark.read.parquet(path + "/codes")
-    one = _pq_trained_encode_batch(spark, path, e.filter(F.col("vec_id") != 0))
+    one = _pq_encode_batch(
+        spark, e, path, IVF_PQ_TRAINED_STORE, e.filter(F.col("vec_id") != 0)
+    )
     k = lambda r: r[0]
     inc_rows = sorted(
         ((r["vec_id"], r["cid"], tuple(r["codes"])) for r in inc.collect()), key=k
@@ -206,17 +212,18 @@ def test_drift_audit_detects_real_drift(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from refitd_etl_spark.plans.similarity import (
+        PQ_TRAINED_CODES,
         _pq_append_base,
         _pq_append_delta,
         _pq_recon_arm,
+        _pq_store,
         _pq_train_rows,
-        pq_trained_codes_path,
     )
     from refitd_etl_spark.sources.registry import table
 
     e = table(spark, sf_dir, "embeddings")
     cb = spark.read.parquet(
-        pq_trained_codes_path(spark, sf_dir) + "/codebook"
+        _pq_store(spark, sf_dir, PQ_TRAINED_CODES) + "/codebook"
     )
     base_mse = _pq_recon_arm(
         _pq_train_rows(_pq_append_base(e)), cb, "base"

@@ -140,10 +140,11 @@ def test_coarse_drift_arm_detects_real_drift(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from refitd_etl_spark.plans.similarity import (
+        IVF_PQ_TRAINED_STORE,
         _km_assign,
         _pq_append_delta,
+        _pq_store,
         coarse_centroid_drift_audit,
-        pq_trained_store_path,
     )
     from refitd_etl_spark.sources.registry import table
 
@@ -152,7 +153,7 @@ def test_coarse_drift_arm_detects_real_drift(spark, sf_dir):
         for r in coarse_centroid_drift_audit(spark, sf_dir).collect()
     }
     pcent = spark.read.parquet(
-        pq_trained_store_path(spark, sf_dir) + "/centroids"
+        _pq_store(spark, sf_dir, IVF_PQ_TRAINED_STORE) + "/centroids"
     )
     e = table(spark, sf_dir, "embeddings")
     drifted = _pq_append_delta(e).withColumn(
