@@ -24,14 +24,32 @@ Exact-parity notes (all verified against the reference source):
   suppressed with the raw (possibly NULL) tag value.
 
 No Python UDFs: at 100 TB this runs entirely inside whole-stage
-codegen, one narrow projection, no shuffle.
+codegen, narrow projections, no shuffle.
+
+Construction: the policy is built as SQL text in plain Python and
+applied in a few ``selectExpr`` stages. The first stages name the
+shared pieces as ``_tp_*`` columns (category and its gating flags, the
+per-field indexed tag arrays and top-N selections, a 0-3 state per
+scalar field, the reasons); the last builds the six outputs from those
+names and leaves the ``_tp_*`` columns out. Two reasons:
+- py4j: built from Column objects, every literal, lambda and field
+  access is its own driver→JVM round trip, about 12,000 per call;
+  the strings cross in under a hundred.
+- plan size: inlined, a shared sub-expression is copied into every
+  use (``curation_status`` alone analyses to 54 KB of SQL that way);
+  named, Catalyst analyses each once, and CollapseProject keeps the
+  stages apart, so each is also evaluated once per row.
+Fit, silhouette and construction details take one per-row vocabulary
+(``CASE WHEN _tp_is_bottom THEN <bottom> ELSE <upper> END``): one
+evaluation per field, not one per vocabulary.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 POLICY_VERSION = "tag_policy_v2.5"
@@ -93,87 +111,122 @@ class PolicyThresholds:
 
 DEFAULT_THRESHOLDS = PolicyThresholds()
 
-_EMPTY_TAGS = "array()"
+# --- SQL-text builders ------------------------------------------------------
+# Every expression below is a plain Python string; a stage is one
+# selectExpr over them, which costs a py4j call per expression, not one
+# per literal, lambda and field access inside it.
+
+_PLAIN = re.compile(r"[A-Za-z0-9 _.\-]*")
+_AI_TAGS = "array<struct<tag:string,confidence:double,reasoning:string>>"
+_SUPP_TYPE = "array<struct<field:string,tag:string,confidence:double,reason:string>>"
 
 
-def _vocab(vocab: tuple[str, ...]) -> Column:
-    return F.array(*[F.lit(v) for v in vocab])
+def _str(v: str | None) -> str:
+    """The one way a string value enters the policy's SQL. Vocabulary
+    can come from a user table (`vocab_from_table`), so anything beyond
+    plain tag characters is passed as its UTF-8 bytes: no quote or
+    backslash in it can end the literal, whatever the parser's
+    escaped-string setting."""
+    if v is None:
+        return "CAST(NULL AS STRING)"
+    if _PLAIN.fullmatch(v):
+        return f"'{v}'"
+    return f"CAST(X'{v.encode().hex()}' AS STRING)"
 
 
-def _indexed(arr: Column) -> Column:
+def _num(x: float) -> str:
+    """Double literal: a bare 0.70 is DECIMAL in Spark SQL."""
+    return f"{float(x)!r}D"
+
+
+def _arr(values) -> str:
+    return f"array({', '.join(_str(v) for v in values)})"
+
+
+def _when(cond: str, value: str) -> str:
+    return f"CASE WHEN {cond} THEN {value} END"
+
+
+def _indexed(src: str) -> str:
     """Attach input position and 0.0-coalesced confidence to each tag obj."""
-    safe = F.coalesce(arr, F.expr("array()").cast("array<struct<tag:string,confidence:double,reasoning:string>>"))
-    return F.transform(
-        safe,
-        lambda x, i: F.struct(
-            x["tag"].alias("tag"),
-            F.coalesce(x["confidence"], F.lit(0.0)).alias("conf"),
-            i.alias("idx"),
-        ),
-    )
-
-
-def _stable_desc(l: Column, r: Column) -> Column:
-    """Comparator: confidence desc, then input index asc (stable sort)."""
     return (
-        F.when(l["conf"] > r["conf"], F.lit(-1))
-        .when(l["conf"] < r["conf"], F.lit(1))
-        .when(l["idx"] < r["idx"], F.lit(-1))
-        .when(l["idx"] > r["idx"], F.lit(1))
-        .otherwise(F.lit(0))
+        f"transform(coalesce({src}, CAST(array() AS {_AI_TAGS})), "
+        f"(x, i) -> named_struct('tag', x.tag, 'conf', coalesce(x.confidence, 0.0D), 'idx', i))"
     )
 
 
-def _is_valid(vocab: tuple[str, ...]):
-    def check(x: Column) -> Column:
-        return F.coalesce(F.array_contains(_vocab(vocab), x["tag"]), F.lit(False))
-
-    return check
+def _valid(vocab: str, x: str = "x") -> str:
+    return f"coalesce(array_contains({vocab}, {x}.tag), false)"
 
 
-def _supp(field: str, x: Column, reason: str) -> Column:
-    return F.struct(
-        F.lit(field).alias("field"),
-        x["tag"].alias("tag"),
-        x["conf"].alias("conf_"),
-        F.lit(reason).alias("reason"),
+def _supp(field: str, tag: str, conf: str, reason: str) -> str:
+    return (
+        f"named_struct('field', {_str(field)}, 'tag', {tag}, "
+        f"'confidence', {conf}, 'reason', {_str(reason)})"
     )
 
 
-def _multi_field(
-    arr: Column,
-    field: str,
-    vocab: tuple[str, ...],
-    min_conf: float,
-    top_n: int,
-    illegal_reason: str = "illegal_tag",
-    low_reason: str = "below_allow_threshold",
-) -> tuple[Column, Column, Column]:
-    """Process a list-of-tags field.
+# confidence desc, then input index asc: the reference's stable sort
+_STABLE_DESC = (
+    "(l, r) -> CASE WHEN l.conf > r.conf THEN -1 WHEN l.conf < r.conf THEN 1 "
+    "WHEN l.idx < r.idx THEN -1 WHEN l.idx > r.idx THEN 1 ELSE 0 END"
+)
 
-    Returns (selected_tag_names, suppressed_entries_in_input_order,
-    any_illegal_flag, selected_structs) — selected via stable top-N.
-    """
-    idx = _indexed(arr)
-    valid = _is_valid(vocab)
-    per_item_supp = F.filter(
-        F.transform(
-            idx,
-            lambda x: F.when(~valid(x), _supp(field, x, illegal_reason)).when(
-                x["conf"] < F.lit(min_conf), _supp(field, x, low_reason)
-            ),
-        ),
-        lambda s: s.isNotNull(),
+
+def _selected(idx: str, vocab: str, min_conf: float, top_n: int) -> str:
+    """Stable top-N of the legal tags at or above `min_conf`."""
+    eligible = f"filter({idx}, x -> {_valid(vocab)} AND x.conf >= {_num(min_conf)})"
+    return f"slice(array_sort({eligible}, {_STABLE_DESC}), 1, {top_n})"
+
+
+def _tags(selected: str) -> str:
+    return f"transform({selected}, x -> x.tag)"
+
+
+def _multi_supp(idx: str, field: str, vocab: str, min_conf: float,
+                illegal_reason: str = "illegal_tag", low_reason: str = "below_allow_threshold") -> str:
+    """Suppressed entries of a list-of-tags field, in input order. Tags
+    that pass but lose the top-N cut are dropped silently (reference)."""
+    entry = (
+        f"CASE WHEN NOT {_valid(vocab)} THEN {_supp(field, 'x.tag', 'x.conf', illegal_reason)} "
+        f"WHEN x.conf < {_num(min_conf)} THEN {_supp(field, 'x.tag', 'x.conf', low_reason)} END"
     )
-    eligible = F.filter(idx, lambda x: valid(x) & (x["conf"] >= F.lit(min_conf)))
-    selected = F.slice(F.array_sort(eligible, _stable_desc), 1, top_n)
-    tags = F.transform(selected, lambda x: x["tag"])
-    any_illegal = F.exists(idx, lambda x: ~valid(x))
-    return tags, per_item_supp, any_illegal, selected
+    return f"filter(transform({idx}, x -> {entry}), s -> s IS NOT NULL)"
 
 
-def _nullif_empty(arr: Column) -> Column:
-    return F.when(F.size(arr) > 0, arr)
+def _any_illegal(idx: str, vocab: str) -> str:
+    return f"exists({idx}, x -> NOT {_valid(vocab)})"
+
+
+# scalar-field state: 0 absent, 1 illegal, 2 legal but below threshold, 3 accepted
+_ABSENT, _ILLEGAL, _LOW, _OK = 0, 1, 2, 3
+
+
+def _conf(obj: str) -> str:
+    return f"coalesce({obj}.confidence, 0.0D)"
+
+
+def _state(obj: str, vocab: str, min_conf: float) -> str:
+    return (
+        f"CASE WHEN {obj} IS NULL THEN {_ABSENT} WHEN NOT {_valid(vocab, obj)} THEN {_ILLEGAL} "
+        f"WHEN {_conf(obj)} < {_num(min_conf)} THEN {_LOW} ELSE {_OK} END"
+    )
+
+
+def _scalar_supp(state: str, obj: str, field: str,
+                 illegal_reason: str = "illegal_tag", low_reason: str = "below_allow_threshold") -> str:
+    return (
+        f"CASE WHEN {state} = {_ILLEGAL} THEN array({_supp(field, obj + '.tag', _conf(obj), illegal_reason)}) "
+        f"WHEN {state} = {_LOW} THEN array({_supp(field, obj + '.tag', _conf(obj), low_reason)}) END"
+    )
+
+
+def _nullif_empty(arr: str) -> str:
+    return _when(f"size({arr}) > 0", arr)
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def apply_tag_policy(
@@ -192,270 +245,200 @@ def apply_tag_policy(
     dict, style_tagger.py:155-200) — e.g.
     ``{"style_identity": ("gorpcore",)}``. Collect the custom table to
     the driver first; it is vocabulary-sized, not data-sized.
+
+    Intermediate columns are named ``_tp_*`` and dropped again; input
+    columns of that prefix are not supported.
     """
     t = thresholds
     extras = extra_vocab or {}
 
-    def vocab_of(field: str, base: tuple[str, ...]) -> tuple[str, ...]:
-        return base + tuple(v for v in extras.get(field, ()) if v not in base)
-    raw = F.col("tags_ai_raw")
-    # Reference uses Python truthiness (`category or raw.get('category','top')`,
-    # tag_policy.py:557-976), so '' falls through like None — nullif('')
-    # mirrors that; plain coalesce would keep an empty-string category
-    # and flip the is_top/is_bottom/is_shoes gating.
-    category = F.coalesce(
-        F.nullif(F.col("category"), F.lit("")),
-        F.nullif(raw["category"], F.lit("")),
-        F.lit("top"),
-    )
+    def vocab(field: str, base: tuple[str, ...]) -> str:
+        return _arr(base + tuple(v for v in extras.get(field, ()) if v not in base))
 
-    is_top = category.isin("top", "top_base", "top_mid")
-    is_bottom = category == "bottom"
-    is_shoes = category == "footwear"
+    def per_row(field: str, bottom: tuple[str, ...], upper: tuple[str, ...]) -> str:
+        return f"CASE WHEN _tp_is_bottom THEN {vocab(field, bottom)} ELSE {vocab(field, upper)} END"
 
-    # --- 0. top_layer_role -------------------------------------------------
-    role_text = F.lower(
-        F.concat_ws(" ", F.coalesce(F.col("product_name"), F.lit("")), F.coalesce(F.col("subcategory"), F.lit("")))
-    )
-    matched_role = F.coalesce(
-        *[F.when(role_text.contains(k), F.lit("mid")) for k in TOP_LAYER_MID],
-        *[F.when(role_text.contains(k), F.lit("base")) for k in TOP_LAYER_BASE],
-    )
-    top_layer_role = F.when(is_top, F.coalesce(matched_role, F.lit("base")))
-    role_defaulted = is_top & matched_role.isNull()
+    raw = "tags_ai_raw"
+    style_v = vocab("style_identity", STYLE_IDENTITY_TAGS)
+    ctx_v = vocab("context", CONTEXT_TAGS)
+    pair_v = vocab("pairing_tags", PAIRING_TAGS)
+    det_v = per_row("construction_details", DETAILS_BOTTOM_TAGS, DETAILS_UPPER_TAGS)
+    # scalar fields with a fixed vocabulary: (state column, field, vocab, threshold)
+    scalars = {
+        "_tp_fm": ("formality", vocab("formality", FORMALITY_TAGS), t.formality_flag),
+        "_tp_ln": ("length", vocab("length", LENGTH_TAGS), t.length_allow),
+        "_tp_pat": ("pattern", vocab("pattern", PATTERN_TAGS), t.pattern_allow),
+        "_tp_st": ("shoe_type", vocab("shoe_type", SHOE_TYPE_TAGS), t.shoe_type_auto),
+        "_tp_pr": ("profile", vocab("profile", SHOE_PROFILE_TAGS), t.shoe_profile_allow),
+        "_tp_cl": ("closure", vocab("closure", SHOE_CLOSURE_TAGS), t.shoe_closure_allow),
+    }
 
-    # --- 1. style identity -------------------------------------------------
-    style_tags, style_supp, style_illegal, style_sel = _multi_field(
-        raw["style_identity"], "style_identity", vocab_of("style_identity", STYLE_IDENTITY_TAGS),
-        t.style_identity_flag, 2, low_reason="below_flag_threshold",
-    )
-    style_missing = F.size(style_tags) == 0
-    style_passive = (~style_missing) & F.exists(
-        style_sel, lambda x: x["conf"] < F.lit(t.style_identity_auto)
-    )
+    def obj(field: str) -> str:
+        return f"{raw}.{field}"
 
-    # --- scalar-field helper ----------------------------------------------
-    def scalar(obj: Column, field: str, vocab: tuple[str, ...], min_conf: float,
-               illegal_reason: str = "illegal_tag", low_reason: str = "below_allow_threshold"):
-        x = F.struct(obj["tag"].alias("tag"), F.coalesce(obj["confidence"], F.lit(0.0)).alias("conf"))
-        legal = F.coalesce(F.array_contains(_vocab(vocab), obj["tag"]), F.lit(False))
-        present = obj.isNotNull()
-        is_illegal = present & ~legal
-        is_low = present & legal & (x["conf"] < F.lit(min_conf))
-        accepted = present & legal & (x["conf"] >= F.lit(min_conf))
-        supp = F.when(is_illegal, F.array(_supp(field, x, illegal_reason))).when(
-            is_low, F.array(_supp(field, x, low_reason))
-        )
-        return x, present, is_illegal, is_low, accepted, supp
-
-    # --- 1b. formality -----------------------------------------------------
-    fm, fm_present, fm_illegal, fm_low, fm_ok, fm_supp = scalar(
-        raw["formality"], "formality", vocab_of("formality", FORMALITY_TAGS), t.formality_flag,
-        low_reason="below_flag_threshold",
-    )
-    formality = F.when(fm_ok, fm["tag"]).otherwise(F.lit("casual"))
-    formality_defaulted = ~fm_ok
-    formality_low_conf = fm_ok & (fm["conf"] < F.lit(t.formality_auto))
-
-    # --- 2. fit (apparel only) --------------------------------------------
-    fit_vocab_b = vocab_of("fit", FIT_TAGS_BOTTOM)
-    fit_vocab_u = vocab_of("fit", FIT_TAGS_UPPER)
-    fit_b = scalar(raw["fit"], "fit", fit_vocab_b, t.fit_flag,
-                   illegal_reason="invalid_for_category", low_reason="below_flag_threshold")
-    fit_u = scalar(raw["fit"], "fit", fit_vocab_u, t.fit_flag,
-                   illegal_reason="invalid_for_category", low_reason="below_flag_threshold")
-
-    def pick(b, u):
-        return [F.when(is_bottom, bb).otherwise(uu) for bb, uu in zip(b, u)]
-
-    fit_x, fit_present, fit_illegal, fit_low, fit_ok, fit_supp = pick(fit_b, fit_u)
-    fit_final = F.when(~is_shoes, F.when(fit_ok, fit_x["tag"]).otherwise(F.lit("regular")))
-    fit_missing_reason = (~is_shoes) & ~fit_ok  # None, invalid, or low
-    fit_defaulted = (~is_shoes) & ~fit_ok
-    fit_low_conf = (~is_shoes) & fit_ok & (fit_x["conf"] < F.lit(t.fit_auto))
-    fit_supp = F.when(~is_shoes, fit_supp)
-
-    # --- 3. silhouette (apparel only) -------------------------------------
-    sil_b = scalar(raw["silhouette"], "silhouette", vocab_of("silhouette", SILHOUETTE_BOTTOM_TAGS), t.silhouette_allow,
-                   illegal_reason="invalid_for_category")
-    sil_u = scalar(raw["silhouette"], "silhouette", vocab_of("silhouette", SILHOUETTE_UPPER_TAGS), t.silhouette_allow,
-                   illegal_reason="invalid_for_category")
-    sil_x, sil_present, sil_illegal, sil_low, sil_ok, sil_supp = pick(sil_b, sil_u)
-    sil_default = F.when(is_bottom, F.lit("straight")).otherwise(F.lit("neutral"))
-    sil_final = F.when(~is_shoes, F.when(sil_ok, sil_x["tag"]).otherwise(sil_default))
-    sil_missing_reason = (~is_shoes) & ~sil_ok
-    sil_defaulted = (~is_shoes) & ~sil_ok
-    sil_low_conf = (~is_shoes) & sil_ok & (sil_x["conf"] < F.lit(t.silhouette_auto))
-    sil_supp = F.when(~is_shoes, sil_supp)
-
-    # --- 4. length (apparel only, optional) --------------------------------
-    ln_x, ln_present, ln_illegal, ln_low, ln_ok, ln_supp = scalar(
-        raw["length"], "length", vocab_of("length", LENGTH_TAGS), t.length_allow
-    )
-    length_final = F.when((~is_shoes) & ln_ok, ln_x["tag"])
-    ln_supp = F.when(~is_shoes, ln_supp)
-
-    # --- 5. context (optional, top-2) --------------------------------------
-    ctx_tags, ctx_supp, _ctx_illegal, _ = _multi_field(
-        raw["context"], "context", vocab_of("context", CONTEXT_TAGS), t.context_allow, 2
-    )
-
-    # --- 6. construction details (apparel only, top-2, gated at flag) ------
-    det_b = _multi_field(raw["construction_details"], "construction_details",
-                         vocab_of("construction_details", DETAILS_BOTTOM_TAGS), t.details_flag, 2,
-                         illegal_reason="invalid_for_category", low_reason="below_flag_threshold")
-    det_u = _multi_field(raw["construction_details"], "construction_details",
-                         vocab_of("construction_details", DETAILS_UPPER_TAGS), t.details_flag, 2,
-                         illegal_reason="invalid_for_category", low_reason="below_flag_threshold")
-    det_tags = F.when(~is_shoes, F.when(is_bottom, det_b[0]).otherwise(det_u[0]))
-    det_supp = F.when(~is_shoes, F.when(is_bottom, det_b[1]).otherwise(det_u[1]))
-    det_inappropriate = (~is_shoes) & F.when(is_bottom, det_b[2]).otherwise(det_u[2])
-
-    # --- 7. pattern (optional) ---------------------------------------------
-    pat_x, pat_present, pat_illegal, pat_low, pat_ok, pat_supp = scalar(
-        raw["pattern"], "pattern", vocab_of("pattern", PATTERN_TAGS), t.pattern_allow
-    )
-    pattern_final = F.when(pat_ok, pat_x["tag"])
-
-    # --- 8. pairing (optional, top-3) ---------------------------------------
-    pair_tags, pair_supp, _pair_illegal, _ = _multi_field(
-        raw["pairing_tags"], "pairing_tags", vocab_of("pairing_tags", PAIRING_TAGS), t.pairing_allow, 3
-    )
-
-    # --- 9. shoe fields (footwear only) -------------------------------------
-    st_obj = raw["shoe_type"]
-    st_x = F.struct(st_obj["tag"].alias("tag"), F.coalesce(st_obj["confidence"], F.lit(0.0)).alias("conf"))
-    st_legal = F.coalesce(F.array_contains(_vocab(vocab_of("shoe_type", SHOE_TYPE_TAGS)), st_obj["tag"]), F.lit(False))
-    st_present = st_obj.isNotNull()
-    st_illegal = st_present & ~st_legal
-    st_low = st_present & st_legal & (st_x["conf"] < F.lit(t.shoe_type_auto))
-    st_ok_full = st_present & st_legal & (st_x["conf"] >= F.lit(t.shoe_type_auto))
-    # low-confidence shoe_type: suppressed for audit but still accepted
-    shoe_type_final = F.when(
-        is_shoes, F.when(st_ok_full | st_low, st_x["tag"]).otherwise(F.lit("dress-shoes"))
-    )
-    shoe_type_defaulted = is_shoes & ~(st_ok_full | st_low)
-    st_supp = F.when(
-        is_shoes,
-        F.when(st_illegal, F.array(_supp("shoe_type", st_x, "illegal_tag"))).when(
-            st_low, F.array(_supp("shoe_type", st_x, "below_auto_threshold"))
-        ),
-    )
-
-    pr_x, pr_present, pr_illegal, pr_low, pr_ok, pr_supp = scalar(
-        raw["profile"], "profile", vocab_of("profile", SHOE_PROFILE_TAGS), t.shoe_profile_allow
-    )
-    profile_final = F.when(is_shoes, F.when(pr_ok, pr_x["tag"]).otherwise(F.lit("standard")))
-    profile_defaulted = is_shoes & ~pr_ok
-    pr_supp = F.when(is_shoes, pr_supp)
-
-    cl_x, cl_present, cl_illegal, cl_low, cl_ok, cl_supp = scalar(
-        raw["closure"], "closure", vocab_of("closure", SHOE_CLOSURE_TAGS), t.shoe_closure_allow
-    )
-    closure_final = F.when(is_shoes & cl_ok, cl_x["tag"])
-    cl_supp = F.when(is_shoes, cl_supp)
-
-    # --- reasons (reference append order, order-preserving dedup) -----------
-    reason_items = F.array(
-        F.when(is_top & role_defaulted, F.lit("missing_top_layer_role")),
-        F.when(style_illegal, F.lit("illegal_tag_returned")),
-        F.when(style_missing, F.lit("missing_style_identity")),
-        F.when(style_passive, F.lit("style_identity_needs_passive_review")),
-        F.when(fm_illegal, F.lit("illegal_formality_tag")),
-        F.when(formality_low_conf, F.lit("formality_low_confidence")),
-        F.when(fit_missing_reason, F.lit("missing_fit")),
-        F.when(fit_low_conf, F.lit("fit_low_confidence")),
-        F.when(sil_missing_reason, F.lit("missing_silhouette")),
-        F.when(sil_low_conf, F.lit("silhouette_low_confidence")),
-        F.when(det_inappropriate, F.lit("category_inappropriate_detail")),
-        F.when(is_shoes & (~st_present | st_illegal), F.lit("missing_shoe_type")),
-        F.when(is_shoes & st_low, F.lit("shoe_type_low_confidence")),
-        F.when(is_shoes & ~pr_present, F.lit("missing_shoe_profile")),
-    )
-    reasons = F.filter(reason_items, lambda r: r.isNotNull())
-    # order-preserving dedup (reference: dict.fromkeys)
-    reasons = F.filter(
-        reasons,
-        lambda r, i: ~F.exists(F.slice(reasons, 1, i), lambda prev: prev == r),
-    )
-
-    # --- suppressed audit (reference append order) --------------------------
-    empty_supp = F.expr("array()").cast(
-        "array<struct<field:string,tag:string,conf_:double,reason:string>>"
-    )
-    suppressed = F.concat(
-        *[
-            F.coalesce(c, empty_supp)
-            for c in (
-                style_supp, fm_supp, fit_supp, sil_supp, ln_supp,
-                ctx_supp, det_supp, pat_supp, pair_supp,
-                st_supp, pr_supp, cl_supp,
-            )
-        ]
-    )
-    suppressed = F.transform(
-        suppressed,
-        lambda s: F.struct(
-            s["field"].alias("field"), s["tag"].alias("tag"),
-            s["conf_"].alias("confidence"), s["reason"].alias("reason"),
-        ),
-    )
-
-    # --- defaults audit (reference append order) ----------------------------
-    def _default(field: str, value, reason: str) -> Column:
-        return F.struct(F.lit(field).alias("field"), value.alias("value"), F.lit(reason).alias("reason"))
-
-    default_items = F.array(
-        F.when(role_defaulted, _default("top_layer_role", F.lit("base"), "could_not_determine_from_name")),
-        F.when(formality_defaulted, _default("formality", F.lit("casual"), "default_fallback")),
-        F.when(fit_defaulted, _default("fit", F.lit("regular"), "required_missing_or_suppressed")),
-        F.when(sil_defaulted, _default("silhouette", sil_default, "required_missing_or_suppressed")),
-        F.when(shoe_type_defaulted, _default("shoe_type", F.lit("dress-shoes"), "required_missing_or_suppressed")),
-        F.when(profile_defaulted, _default("profile", F.lit("standard"), "default_fallback")),
-    )
-    defaults = F.filter(default_items, lambda d: d.isNotNull())
-
-    # --- status --------------------------------------------------------------
-    critical = F.array(F.lit("missing_style_identity"), F.lit("missing_shoe_type"))
-    review = F.array(
-        F.lit("style_identity_needs_passive_review"),
-        F.lit("category_inappropriate_detail"),
-        F.lit("illegal_tag_returned"),
-        F.lit("silhouette_low_confidence"),
-        F.lit("shoe_type_low_confidence"),
-    )
-    status = (
-        F.when(F.arrays_overlap(reasons, critical), F.lit("needs_fix"))
-        .when(F.arrays_overlap(reasons, review), F.lit("needs_review"))
-        .otherwise(F.lit("approved"))
-    )
-
-    tags_final = F.struct(
-        category.alias("category"),
-        _nullif_empty(style_tags).alias("style_identity"),
-        fit_final.alias("fit"),
-        sil_final.alias("silhouette"),
-        length_final.alias("length"),
-        formality.alias("formality"),
-        _nullif_empty(ctx_tags).alias("context"),
-        _nullif_empty(F.coalesce(det_tags, F.expr("array()").cast("array<string>"))).alias("construction_details"),
-        pattern_final.alias("pattern"),
-        _nullif_empty(pair_tags).alias("pairing_tags"),
-        top_layer_role.alias("top_layer_role"),
-        shoe_type_final.alias("shoe_type"),
-        profile_final.alias("profile"),
-        closure_final.alias("closure"),
-    )
-
-    return df.withColumns(
+    stages: list[dict[str, str]] = [
         {
-            "tags_final": tags_final,
-            "curation_status": status,
-            "curation_reasons": reasons,
-            "suppressed_tags": suppressed,
-            "defaults_applied": defaults,
-            "tag_policy_version": F.lit(POLICY_VERSION),
-        }
+            # Reference uses Python truthiness (`category or
+            # raw.get('category','top')`), so '' falls through like None —
+            # nullif('') mirrors that; plain coalesce would keep an
+            # empty-string category and flip the category gating.
+            "_tp_cat": f"coalesce(nullif(category, ''), nullif({raw}.category, ''), 'top')",
+            "_tp_role_text": "lower(concat_ws(' ', coalesce(product_name, ''), coalesce(subcategory, '')))",
+            "_tp_style": _indexed(obj("style_identity")),
+            "_tp_ctx": _indexed(obj("context")),
+            "_tp_det": _indexed(obj("construction_details")),
+            "_tp_pair": _indexed(obj("pairing_tags")),
+            **{col: _state(obj(f), v, m) for col, (f, v, m) in scalars.items()},
+        },
+        {
+            "_tp_is_top": "_tp_cat IN ('top', 'top_base', 'top_mid')",
+            "_tp_is_bottom": "_tp_cat = 'bottom'",
+            "_tp_is_shoes": "_tp_cat = 'footwear'",
+            # top-layer-role keywords (tag_policy.py:251-274); mid checked first
+            "_tp_role": (
+                f"CASE WHEN exists({_arr(TOP_LAYER_MID)}, k -> contains(_tp_role_text, k)) THEN 'mid' "
+                f"WHEN exists({_arr(TOP_LAYER_BASE)}, k -> contains(_tp_role_text, k)) THEN 'base' END"
+            ),
+            "_tp_style_sel": _selected("_tp_style", style_v, t.style_identity_flag, 2),
+            "_tp_ctx_tags": _tags(_selected("_tp_ctx", ctx_v, t.context_allow, 2)),
+            "_tp_pair_tags": _tags(_selected("_tp_pair", pair_v, t.pairing_allow, 3)),
+        },
+        {
+            # fit and silhouette vocabularies depend on the row's category
+            "_tp_fit": _state(obj("fit"), per_row("fit", FIT_TAGS_BOTTOM, FIT_TAGS_UPPER), t.fit_flag),
+            "_tp_sil": _state(
+                obj("silhouette"),
+                per_row("silhouette", SILHOUETTE_BOTTOM_TAGS, SILHOUETTE_UPPER_TAGS),
+                t.silhouette_allow,
+            ),
+            # construction details: apparel only, top-2, gated at details_flag
+            # (the reference's details_allow is dead code, tag_policy.py:814-824)
+            "_tp_det_tags": _when("NOT _tp_is_shoes", _tags(_selected("_tp_det", det_v, t.details_flag, 2))),
+        },
+    ]
+
+    role_defaulted = "(_tp_is_top AND _tp_role IS NULL)"
+    style_missing = "size(_tp_style_sel) = 0"
+    fit_defaulted = f"(NOT _tp_is_shoes AND _tp_fit != {_OK})"
+    sil_defaulted = f"(NOT _tp_is_shoes AND _tp_sil != {_OK})"
+    # a low-confidence shoe_type is suppressed for audit but still accepted
+    # (tag_policy.py:886-892)
+    st_kept = f"_tp_st IN ({_LOW}, {_OK})"
+    sil_default = "CASE WHEN _tp_is_bottom THEN 'straight' ELSE 'neutral' END"
+
+    def low_conf(state: str, field: str, auto: float) -> str:
+        return f"{state} = {_OK} AND {_conf(obj(field))} < {_num(auto)}"
+
+    # reasons in the reference's append order; dedup keeps first occurrences
+    # (reference: dict.fromkeys)
+    reason_items = [
+        (role_defaulted, "missing_top_layer_role"),
+        (_any_illegal("_tp_style", style_v), "illegal_tag_returned"),
+        (style_missing, "missing_style_identity"),
+        (
+            f"NOT {style_missing} AND exists(_tp_style_sel, x -> x.conf < {_num(t.style_identity_auto)})",
+            "style_identity_needs_passive_review",
+        ),
+        (f"_tp_fm = {_ILLEGAL}", "illegal_formality_tag"),
+        (low_conf("_tp_fm", "formality", t.formality_auto), "formality_low_confidence"),
+        (fit_defaulted, "missing_fit"),
+        (f"NOT _tp_is_shoes AND {low_conf('_tp_fit', 'fit', t.fit_auto)}", "fit_low_confidence"),
+        (sil_defaulted, "missing_silhouette"),
+        (f"NOT _tp_is_shoes AND {low_conf('_tp_sil', 'silhouette', t.silhouette_auto)}", "silhouette_low_confidence"),
+        (f"NOT _tp_is_shoes AND {_any_illegal('_tp_det', det_v)}", "category_inappropriate_detail"),
+        (f"_tp_is_shoes AND _tp_st IN ({_ABSENT}, {_ILLEGAL})", "missing_shoe_type"),
+        (f"_tp_is_shoes AND _tp_st = {_LOW}", "shoe_type_low_confidence"),
+        (f"_tp_is_shoes AND _tp_pr = {_ABSENT}", "missing_shoe_profile"),
+    ]
+    items = ", ".join(_when(cond, _str(reason)) for cond, reason in reason_items)
+    stages.append({"_tp_reasons": f"array_distinct(filter(array({items}), r -> r IS NOT NULL))"})
+
+    # suppressed audit, reference append order
+    suppressed = [
+        _multi_supp("_tp_style", "style_identity", style_v, t.style_identity_flag,
+                    low_reason="below_flag_threshold"),
+        _scalar_supp("_tp_fm", obj("formality"), "formality", low_reason="below_flag_threshold"),
+        _when("NOT _tp_is_shoes", _scalar_supp("_tp_fit", obj("fit"), "fit", "invalid_for_category",
+                                               "below_flag_threshold")),
+        _when("NOT _tp_is_shoes", _scalar_supp("_tp_sil", obj("silhouette"), "silhouette",
+                                               "invalid_for_category")),
+        _when("NOT _tp_is_shoes", _scalar_supp("_tp_ln", obj("length"), "length")),
+        _multi_supp("_tp_ctx", "context", ctx_v, t.context_allow),
+        _when("NOT _tp_is_shoes", _multi_supp("_tp_det", "construction_details", det_v, t.details_flag,
+                                              "invalid_for_category", "below_flag_threshold")),
+        _scalar_supp("_tp_pat", obj("pattern"), "pattern"),
+        _multi_supp("_tp_pair", "pairing_tags", pair_v, t.pairing_allow),
+        _when("_tp_is_shoes", _scalar_supp("_tp_st", obj("shoe_type"), "shoe_type",
+                                           low_reason="below_auto_threshold")),
+        _when("_tp_is_shoes", _scalar_supp("_tp_pr", obj("profile"), "profile")),
+        _when("_tp_is_shoes", _scalar_supp("_tp_cl", obj("closure"), "closure")),
+    ]
+    empty_supp = f"CAST(array() AS {_SUPP_TYPE})"
+
+    def default(cond: str, field: str, value: str, reason: str) -> str:
+        return _when(cond, f"named_struct('field', {_str(field)}, 'value', {value}, 'reason', {_str(reason)})")
+
+    defaults = [
+        default(role_defaulted, "top_layer_role", "'base'", "could_not_determine_from_name"),
+        default(f"_tp_fm != {_OK}", "formality", "'casual'", "default_fallback"),
+        default(fit_defaulted, "fit", "'regular'", "required_missing_or_suppressed"),
+        default(sil_defaulted, "silhouette", sil_default, "required_missing_or_suppressed"),
+        default(f"_tp_is_shoes AND NOT {st_kept}", "shoe_type", "'dress-shoes'", "required_missing_or_suppressed"),
+        default(f"_tp_is_shoes AND _tp_pr != {_OK}", "profile", "'standard'", "default_fallback"),
+    ]
+
+    def accepted(state: str, field: str, otherwise: str = "NULL") -> str:
+        return f"CASE WHEN {state} = {_OK} THEN {obj(field)}.tag ELSE {otherwise} END"
+
+    tags_final = {
+        "category": "_tp_cat",
+        "style_identity": _nullif_empty(_tags("_tp_style_sel")),
+        "fit": _when("NOT _tp_is_shoes", accepted("_tp_fit", "fit", "'regular'")),
+        "silhouette": _when("NOT _tp_is_shoes", accepted("_tp_sil", "silhouette", sil_default)),
+        "length": _when("NOT _tp_is_shoes", accepted("_tp_ln", "length")),
+        "formality": accepted("_tp_fm", "formality", "'casual'"),
+        "context": _nullif_empty("_tp_ctx_tags"),
+        "construction_details": _nullif_empty("coalesce(_tp_det_tags, CAST(array() AS array<string>))"),
+        "pattern": accepted("_tp_pat", "pattern"),
+        "pairing_tags": _nullif_empty("_tp_pair_tags"),
+        "top_layer_role": _when("_tp_is_top", "coalesce(_tp_role, 'base')"),
+        "shoe_type": _when("_tp_is_shoes", f"CASE WHEN {st_kept} THEN {obj('shoe_type')}.tag ELSE 'dress-shoes' END"),
+        "profile": _when("_tp_is_shoes", accepted("_tp_pr", "profile", "'standard'")),
+        "closure": _when("_tp_is_shoes", accepted("_tp_cl", "closure")),
+    }
+    critical = _arr(("missing_style_identity", "missing_shoe_type"))
+    review = _arr((
+        "style_identity_needs_passive_review",
+        "category_inappropriate_detail",
+        "illegal_tag_returned",
+        "silhouette_low_confidence",
+        "shoe_type_low_confidence",
+    ))
+    outputs = {
+        "tags_final": "named_struct({})".format(", ".join(f"'{k}', {v}" for k, v in tags_final.items())),
+        "curation_status": (
+            f"CASE WHEN arrays_overlap(_tp_reasons, {critical}) THEN 'needs_fix' "
+            f"WHEN arrays_overlap(_tp_reasons, {review}) THEN 'needs_review' ELSE 'approved' END"
+        ),
+        "curation_reasons": "_tp_reasons",
+        # rebuilding each entry types the array's elements non-null
+        "suppressed_tags": "transform(concat({}), {})".format(
+            ", ".join(f"coalesce({s}, {empty_supp})" for s in suppressed),
+            "s -> named_struct('field', s.field, 'tag', s.tag, 'confidence', s.confidence, 'reason', s.reason)",
+        ),
+        "defaults_applied": f"filter(array({', '.join(defaults)}), d -> d IS NOT NULL)",
+        "tag_policy_version": _str(POLICY_VERSION),
+    }
+
+    staged = df
+    for stage in stages:
+        staged = staged.selectExpr("*", *[f"{sql} AS {name}" for name, sql in stage.items()])
+    # like withColumns: an existing output column is replaced in place;
+    # the _tp_ columns are left out
+    cols = df.columns
+    return staged.selectExpr(
+        *[f"{outputs[c]} AS {_ident(c)}" if c in outputs else _ident(c) for c in cols],
+        *[f"{sql} AS {name}" for name, sql in outputs.items() if name not in cols],
     )
 
 

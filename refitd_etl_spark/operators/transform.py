@@ -4,12 +4,12 @@ One declarative ``select`` replaces the reference's row-at-a-time
 pydantic/transformer pipeline (product_transformer.py:94-149;
 supabase_loader.py:136-192; pipeline.py:252-340). At 100 TB this is a
 pure narrow map stage: no shuffle, fully whole-stage-codegen, with the
-24-row slot-mapping table applied as a broadcast join.
+24-row slot mapping applied as a literal map lookup (no join).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,27 +53,28 @@ CATEGORY_DISPLAY = {
 }
 
 
-def refitd_mapping_df(spark: SparkSession) -> DataFrame:
-    """The 24-row slot mapping as a broadcastable lookup table (P18)."""
-    rows = [(k, v[0], v[1]) for k, v in RETAILER_TO_REFITD.items()]
-    return spark.createDataFrame(rows, "retailer_category string, category_refitd string, top_layer_role string")
+def _slot_map_sql() -> str:
+    """P18's lookup table as one map literal: key → (cat, role)."""
+    entries = []
+    for key, (cat, role) in RETAILER_TO_REFITD.items():
+        role_sql = f"'{role}'" if role else "CAST(NULL AS STRING)"
+        entries.append(f"'{key}', named_struct('cat', '{cat}', 'role', {role_sql})")
+    return f"map({', '.join(entries)})"
+
+
+_SLOT_MAP = _slot_map_sql()
 
 
 def attach_refitd_slots(df: DataFrame, category_col: str = "category") -> DataFrame:
-    """P18 as a broadcast join; unmapped categories default to (top, base)."""
-    spark = df.sparkSession
-    m = refitd_mapping_df(spark)
+    """P18 as a literal map lookup on the trimmed, lower-cased category;
+    unmapped categories default to (top, base)."""
     key = F.lower(F.trim(F.coalesce(F.col(category_col), F.lit(""))))
-    joined = df.withColumn("_cat_key", key).join(
-        F.broadcast(m), F.col("_cat_key") == m.retailer_category, "left"
-    )
-    return (
-        joined.withColumn("category_refitd", F.coalesce(F.col("category_refitd"), F.lit("top")))
-        .withColumn(
-            "top_layer_role",
-            F.when(F.col("retailer_category").isNull(), F.lit("base")).otherwise(F.col("top_layer_role")),
-        )
-        .drop("retailer_category", "_cat_key")
+    slots = F.expr(_SLOT_MAP)[key]
+    return df.withColumns(
+        {
+            "category_refitd": F.coalesce(slots["cat"], F.lit("top")),
+            "top_layer_role": F.when(slots.isNull(), F.lit("base")).otherwise(slots["role"]),
+        }
     )
 
 

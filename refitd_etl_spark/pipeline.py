@@ -64,26 +64,28 @@ def run_pipeline(
     products_path = os.path.join(store_dir, "products")
     tracking_path = os.path.join(store_dir, "tracking")
 
-    # TRANSFORM (P1-P22): normalize + validate + derive
-    silver = transform_products(bronze)
+    # TRANSFORM (P1-P22): normalize + validate + derive, materialized
+    # once: the counts, the anti-join and both branches of the final
+    # checkpoint (representatives, fan-out) read it instead of re-running
+    # the transform
+    silver = transform_products(bronze).localCheckpoint(eager=True)
     n_candidates = silver.count()
 
     # INCREMENTAL ANTI-JOIN (J1): skip already-tracked ids unless --force
     if not force and os.path.exists(tracking_path):
-        tracked = spark.read.parquet(tracking_path).select("product_id")
+        tracked = spark.read.schema("product_id string").parquet(tracking_path)
         new = silver.join(tracked, "product_id", "left_anti")
+        n_new = new.count()
     else:
         new = silver
-    n_new = new.count()
+        n_new = n_candidates
 
     if n_new > 0:
         # AI TAG (X1+J4): one sensor call per variant group, fanned out,
         # then the deterministic policy layer (T1-T9)
         tagged = tag_representatives(new, sensor=sensor)
         curated = apply_tag_policy(
-            tagged.withColumn("product_name", F.col("name")).withColumn(
-                "subcategory", F.col("category")
-            ),
+            tagged.withColumns({"product_name": F.col("name"), "subcategory": F.col("category")}),
             thresholds=thresholds,
         ).drop("product_name", "subcategory")
         # T8: fold the scraped composition into tags_final so the
@@ -113,7 +115,7 @@ def run_pipeline(
         )
 
         # LOAD (S7/S8/S11): MERGE into products + tracking; JSON metadata
-        sinks.upsert_parquet(spark, products_path, final, key="product_id")
+        products = sinks.upsert_parquet(spark, products_path, final, key="product_id")
         mark = final.select(
             "product_id",
             "url",
@@ -122,15 +124,16 @@ def run_pipeline(
             F.col("price_current").alias("price"),
             F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("scraped_at"),
         )
-        sinks.upsert_parquet(spark, tracking_path, mark, key="product_id")
+        tracking = sinks.upsert_parquet(spark, tracking_path, mark, key="product_id")
         if write_metadata_json:
             sinks.write_partitioned_json(
                 final.select("product_id", "name", "category", "price_current", "image_count"),
                 os.path.join(store_dir, "metadata"),
             )
+    else:
+        products = spark.read.parquet(products_path)
+        tracking = spark.read.parquet(tracking_path)
 
-    products = spark.read.parquet(products_path)
-    tracking = spark.read.parquet(tracking_path)
     return PipelineResult(
         n_candidates=n_candidates,
         n_new=n_new,

@@ -80,11 +80,12 @@ def upsert_parquet(
         merged = current.join(updates.select(key), key, "left_anti").unionByName(
             updates, allowMissingColumns=True
         )
+        merged = merged.localCheckpoint(eager=True)  # cut lineage before overwrite
     else:
         merged = updates
-    merged = merged.localCheckpoint(eager=True)  # cut lineage before overwrite
     _swap_write(merged, path, partition_by=partition_by)
-    return spark.read.parquet(path)
+    # the written schema is known: no inference job on read-back
+    return spark.read.schema(merged.schema).parquet(path)
 
 
 def update_fields(
@@ -154,8 +155,17 @@ def delete_cascade(
 def write_partitioned_json(df: DataFrame, path: str, partition_by: str = "category") -> None:
     """S11: per-product JSON metadata partitioned by category — the
     Spark shape of data/<category>/<id>/metadata.json
-    (file_loader.py:152-198)."""
-    df.write.mode("overwrite").partitionBy(partition_by).json(path)
+    (file_loader.py:152-198).
+
+    The reference writes one file per product and never deletes older
+    ones, so an existing store is merged, not replaced: its rows minus
+    the incoming product ids, plus the incoming rows, swapped in whole."""
+    if not os.path.exists(path):
+        df.write.mode("overwrite").partitionBy(partition_by).json(path)
+        return
+    current = df.sparkSession.read.schema(df.schema).json(path)
+    merged = current.join(df.select("product_id"), "product_id", "left_anti").unionByName(df)
+    _swap_write(merged, path, fmt="json", partition_by=[partition_by])
 
 
 def write_jsonl(lines: DataFrame, path: str, col: str = "jsonl") -> None:

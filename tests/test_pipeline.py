@@ -109,7 +109,8 @@ def test_models_run_once_per_representative(spark, tmp_path):
 def test_incremental_run_with_new_products(spark, tmp_path):
     """A run over a store that already tracks part of the batch tags
     and writes only the new products — and succeeds: the metadata write
-    must not re-read tracking files the tracking upsert replaced."""
+    must not re-read tracking files the tracking upsert replaced. The
+    metadata JSON keeps every product, and a forced rerun duplicates none."""
     from refitd_etl_spark.operators.fixtures import BRONZE_FIXTURE_ROWS, BRONZE_SCHEMA
 
     first = spark.createDataFrame(BRONZE_FIXTURE_ROWS[:4], schema=BRONZE_SCHEMA)
@@ -118,5 +119,45 @@ def test_incremental_run_with_new_products(spark, tmp_path):
     assert 0 < again.n_new < again.n_candidates == 6
     assert again.n_new == 6 - base.n_new
     assert again.products.count() == again.tracking.count() == 6
+    # the metadata store keeps the earlier products: it is merged, not replaced
     meta = spark.read.json(str(tmp_path / "metadata"))
-    assert meta.select("product_id").distinct().count() == again.n_new
+    assert meta.select("product_id").distinct().count() == 6
+    forced = run_pipeline(spark, bronze_fixture(spark), str(tmp_path), force=True)
+    assert forced.n_new == 6
+    ids = [r["product_id"] for r in spark.read.json(str(tmp_path / "metadata")).collect()]
+    assert len(ids) == len(set(ids)) == 6
+
+
+# Spark jobs of a backfill of the fixture into an empty store: the silver
+# checkpoint and its count, the final checkpoint (its shuffle stages run
+# as jobs of their own under adaptive execution), two upsert writes with
+# their dedup shuffles, and the JSON write.
+BACKFILL_JOB_BUDGET = 12
+
+
+def test_backfill_job_budget(spark, tmp_path):
+    """One backfill runs the transform once and no dead jobs: no
+    re-count over the bronze, no checkpoint before writing a new table,
+    no schema-inference read-backs, no broadcast of a lookup table."""
+    sc = spark.sparkContext
+    group = f"backfill-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "backfill job budget", False)
+    try:
+        run_pipeline(spark, bronze_fixture(spark), str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= BACKFILL_JOB_BUDGET
+
+
+def test_transform_is_one_projection(spark):
+    """P18's slot mapping is a literal map lookup: the silver plan has no
+    join and no broadcast exchange."""
+    import re
+
+    from refitd_etl_spark.operators.transform import transform_products
+
+    plan = transform_products(bronze_fixture(spark))._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"[A-Z]\w*Join\b", plan), plan
+    assert "BroadcastExchange" not in plan, plan

@@ -216,6 +216,29 @@ def test_custom_vocabulary_injection(spark):
     assert "illegal_tag_returned" not in custom["curation_reasons"]
 
 
+def test_custom_vocab_with_quote_and_backslash_is_literal(spark):
+    """A custom-vocabulary tag (which may come from a user table) enters
+    the policy as a value, never as SQL text: a quote or a backslash in
+    it is accepted verbatim and cannot end the literal."""
+    from refitd_etl_spark.operators.fixtures import _raw, t
+    from refitd_etl_spark.schemas import POLICY_INPUT
+
+    odd = "it's\\raw'), 'x"
+    rows = [
+        {
+            "product_id": "q1",
+            "category": "top",
+            "product_name": "Trail Shell",
+            "subcategory": None,
+            "tags_ai_raw": _raw(style_identity=[t(odd, 0.9), t("it's", 0.9)]),
+        }
+    ]
+    df = spark.createDataFrame(rows, schema=POLICY_INPUT)
+    got = apply_tag_policy(df, extra_vocab={"style_identity": (odd,)}).first()
+    assert got["tags_final"]["style_identity"] == [odd]
+    assert [(s["tag"], s["reason"]) for s in got["suppressed_tags"]] == [("it's", "illegal_tag")]
+
+
 def test_empty_string_category_falls_through(spark):
     """Reference uses Python truthiness (`category or raw.get('category',
     'top')`), so '' must fall through to the raw category / default
