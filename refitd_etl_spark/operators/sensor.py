@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Protocol
 
 import pandas as pd
@@ -127,13 +127,13 @@ class MockTagSensor:
         return out
 
 
-def tag_representatives(products: DataFrame, sensor: Sensor | None = None) -> DataFrame:
-    """X1+J4: tag one representative per variant group, fan out to members.
-
-    Representative = most images, product_id tie-break (pipeline.py:429-434).
-    Returns the input plus a `tags_ai_raw` column on every variant row.
-    """
-    sensor = sensor or MockTagSensor()
+def _tag_via_representatives(
+    products: DataFrame, sense: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """J4: pick one representative per variant group (most images,
+    product_id tie-break — pipeline.py:429-434), run `sense` on the
+    representatives, and fan its (group_id, tags_ai_raw) rows back to
+    every variant row. Returns the input plus `tags_ai_raw`."""
     group_key = F.coalesce(F.col("parent_product_id"), F.col("product_id"))
     w = Window.partitionBy("group_id").orderBy(F.desc("image_count"), F.asc("product_id"))
     # mapInPandas is opaque to Catalyst's column pruning, so every
@@ -147,7 +147,19 @@ def tag_representatives(products: DataFrame, sensor: Sensor | None = None) -> Da
         .filter(F.col("_rn") == 1)
         .select("group_id", "product_id", "name", "category")
     )
+    return (
+        products.withColumn("group_id", group_key)
+        .join(sense(reps), "group_id", "left")
+        .drop("group_id")
+    )
 
+
+def tag_representatives(products: DataFrame, sensor: Sensor | None = None) -> DataFrame:
+    """X1+J4: tag one representative per variant group, fan out to members.
+
+    Returns the input plus a `tags_ai_raw` column on every variant row.
+    """
+    sensor = sensor or MockTagSensor()
     result_schema = T.StructType(
         [T.StructField("group_id", T.StringType()), T.StructField("tags_ai_raw", TAGS_AI_RAW)]
     )
@@ -159,8 +171,9 @@ def tag_representatives(products: DataFrame, sensor: Sensor | None = None) -> Da
             tags = sensor.tag_batch(pdf)
             yield pd.DataFrame({"group_id": pdf["group_id"].values, "tags_ai_raw": tags})
 
-    tagged = reps.mapInPandas(run_sensor, schema=result_schema)
-    return products.withColumn("group_id", group_key).join(tagged, "group_id", "left").drop("group_id")
+    return _tag_via_representatives(
+        products, lambda reps: reps.mapInPandas(run_sensor, schema=result_schema)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -292,21 +305,12 @@ def tag_representatives_raw(
     products: DataFrame, sensor: RawTextSensor | None = None
 ) -> DataFrame:
     """The raw-text twin of `tag_representatives`: representative
-    selection and fan-out are identical, but the sensor emits messy
+    selection and fan-out are the same code, but the sensor emits messy
     response text and `parse_sensor_response` (T9) recovers the typed
     struct — the exact production shape for a real LLM backend."""
     from .response_parse import parse_sensor_response
 
     sensor = sensor or MockRawTextSensor()
-    group_key = F.coalesce(F.col("parent_product_id"), F.col("product_id"))
-    w = Window.partitionBy("group_id").orderBy(F.desc("image_count"), F.asc("product_id"))
-    reps = (
-        products.withColumn("group_id", group_key)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("group_id", "product_id", "name", "category")
-    )
-
     result_schema = T.StructType(
         [
             T.StructField("group_id", T.StringType()),
@@ -328,10 +332,8 @@ def tag_representatives_raw(
                 }
             )
 
-    responded = reps.mapInPandas(run_sensor, schema=result_schema)
-    parsed = parse_sensor_response(responded).select("group_id", "tags_ai_raw")
-    return (
-        products.withColumn("group_id", group_key)
-        .join(parsed, "group_id", "left")
-        .drop("group_id")
-    )
+    def sense(reps: DataFrame) -> DataFrame:
+        responded = reps.mapInPandas(run_sensor, schema=result_schema)
+        return parse_sensor_response(responded).select("group_id", "tags_ai_raw")
+
+    return _tag_via_representatives(products, sense)

@@ -80,7 +80,10 @@ def run_pipeline(
         new = silver
         n_new = n_candidates
 
-    if n_new > 0:
+    # an empty batch into an empty store still runs the writes, so the
+    # tables exist afterwards (empty, with their real schema) as a MERGE
+    # into a new table would leave them
+    if n_new > 0 or not os.path.exists(products_path):
         # AI TAG (X1+J4): one sensor call per variant group, fanned out,
         # then the deterministic policy layer (T1-T9)
         tagged = tag_representatives(new, sensor=sensor)

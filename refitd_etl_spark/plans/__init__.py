@@ -27,51 +27,51 @@ from . import llmprep  # noqa: E402,F401
 # (tests/test_round5_plan_shapes.py) re-derives the changed set on
 # every pytest run and asserts the window is saturated with it.
 # Changed-set provenance (oracles byte-unchanged):
-# - the four tag-policy consumers: the policy is staged SQL text with
-#   per-row fit/silhouette/detail vocabularies (value-identical).
-# - transform_products_silver: the P18 slot mapping is a map lookup,
-#   not a broadcast join.
-# - pipeline_end_to_end, sink_merge_state, curation_event_state,
-#   json_store_roundtrip: silver is materialized once; upserts skip the
-#   checkpoint on a new table and read back with the written schema;
-#   the JSON metadata store is merged into when it exists.
-# - the sensor queries: they import the policy's vocabularies.
-# - the rest, from earlier in the round: the six PQ code-store serves
-#   and both drift audits (one spec-keyed store builder), the IVF
-#   queries' seed-centroid helper, the round-capped label-propagation
-#   loop, and neighbours dirtied by module-level edits.
+# - the four connected-components consumers: one label-propagation
+#   loop, a pointer-jumping step for dedup_clusters_largestar, a
+#   2-column round checkpoint; both drift audits read their trained
+#   artifact without building a code store; both SemDeDup queries share
+#   one keep-rule helper; the sensor queries and pipeline_end_to_end
+#   share one representative/fan-out helper (plans unchanged), and an
+#   empty batch into an empty store creates the tables.
+# - earlier in the round: the four tag-policy consumers (staged SQL
+#   text), transform_products_silver (P18 map lookup), the pipeline
+#   sinks (silver materialized once, new-table upserts, merged JSON
+#   store), the six PQ code-store serves (one spec-keyed store
+#   builder), the IVF queries' seed-centroid helper, and neighbours
+#   dirtied by module-level edits.
 _PRIORITY: tuple[str, ...] = (
     # regenerate with `python scripts/changed_queries.py` after any
     # helper edit
+    "dedup_clusters",
+    "dedup_clusters_largestar",
+    "dedup_retention_report",
+    "cluster_aware_split",
+    "pq_codebook_drift_audit",
+    "coarse_centroid_drift_audit",
+    "semantic_dedup_clusters",
+    "semantic_dedup_incremental",
+    "sensor_tag_fanout",
+    "sensor_raw_roundtrip",
+    "pipeline_end_to_end",
     "tag_policy_results",
     "tag_policy_suppressed_audit",
     "composition_merge_final",
     "custom_vocab_merge",
     "transform_products_silver",
-    "pipeline_end_to_end",
     "sink_merge_state",
     "curation_event_state",
     "json_store_roundtrip",
-    "sensor_tag_fanout",
     "sensor_response_parse",
-    "sensor_raw_roundtrip",
     "pq_codes_serving",
     "ivf_pq_codes_serving",
     "pq_codes_append_serving",
     "pq_trained_codes_serving",
     "ivf_pq_codes_append_serving",
     "ivf_pq_trained_store_serving",
-    "pq_codebook_drift_audit",
-    "coarse_centroid_drift_audit",
     "embedding_ivf_topk",
     "ivf_pq_topk",
     "ivf_recall_report",
-    "dedup_clusters",
-    "dedup_retention_report",
-    "cluster_aware_split",
-    "dedup_clusters_largestar",
-    "semantic_dedup_clusters",
-    "semantic_dedup_incremental",
     "embedding_kmeans_clusters",
     "ivf_kmeans_topk",
     "price_text_parse",

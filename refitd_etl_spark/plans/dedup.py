@@ -4,6 +4,11 @@ LLM-data-pipeline dedup family:
 - exact dedup (hash-groupBy)                      → `exact_dedup`
 - n-gram Jaccard near-dup (shingle self-join)     → `ngram_jaccard_pairs`
 - MinHash + LSH near-dup (band bucket join)       → `minhash_lsh_pairs`
+- clusters: connected components of the LSH pairs → `dedup_clusters`,
+  `dedup_clusters_largestar` — ONE loop, `label_propagation_components`
+  (min-label hooking; the second name adds a pointer-jumping step per
+  round for chain-shaped components); survivors and splits downstream
+  (`dedup_retention_report`, `cluster_aware_split`)
 
 Reference parity: the reference dedups by product_id via a SQLite
 tracking set (SURVEY U1, tracker.py:61-88; zara_extractor.py:191) —
@@ -18,7 +23,10 @@ int/int → double division: deterministic IEEE.
 Scale notes: shingle self-join is quadratic in bucket size — the LSH
 variant is the 100 TB path (band buckets bound join fan-out; skewed
 mega-buckets would be salted/capped). Word 3-gram shingles keep the
-shingle vocabulary sparse so exact-match buckets stay small.
+shingle vocabulary sparse so exact-match buckets stay small. The
+components loop needs O(diameter) rounds plain and about
+O(log diameter) with jumping, bounded by `CC_MAX_ROUNDS` either way;
+at 100 TB it would checkpoint reliably instead of locally.
 """
 
 from __future__ import annotations
@@ -198,6 +206,29 @@ _PAIR_CTES = f"""sigs AS ({_SIG_SQL}),
     )"""
 
 
+# The transitive closure every connected-components oracle walks: each
+# node reaches every label of its component, so MIN(lbl) per node is
+# the component minimum whatever loop the Spark side runs.
+_WALK_CTES = f"""{_PAIR_CTES},
+    edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM pairs
+        UNION ALL
+        SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ),
+    walk(node, lbl) AS (
+        SELECT doc_id, doc_id FROM documents
+        UNION
+        SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.node = e.src
+    )"""
+
+_CLUSTERS_ORACLE = f"""
+    WITH RECURSIVE {_WALK_CTES}
+    SELECT node AS doc_id, MIN(lbl) AS cluster_id,
+           (node = MIN(lbl)) AS is_canonical
+    FROM walk GROUP BY node
+    """
+
+
 @query(
     "minhash_lsh_pairs",
     oracle=f"""
@@ -282,22 +313,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE {_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    walk(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.node = e.src
-    )
-    SELECT node AS doc_id, MIN(lbl) AS cluster_id,
-           (node = MIN(lbl)) AS is_canonical
-    FROM walk GROUP BY node
-    """,
+    oracle=_CLUSTERS_ORACLE,
     survey_ops="dedup,iterative",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,50 +322,49 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical flag (the keep-one-per-cluster decision that completes the
     dedup pipeline: pairs → clusters → canonical survivors).
 
-    Iterative min-label propagation (Pregel-style): each round every
-    node takes the min of its own label and its neighbors' labels;
-    converges in O(component diameter) rounds to a state independent of
-    iteration order, which is why the DuckDB recursive-CTE oracle (min
-    doc_id over the transitive closure) reproduces it exactly. Each
-    round is one shuffle; `localCheckpoint` truncates lineage so plans
-    don't grow with iterations. LSH cliques keep diameters tiny; at
-    100 TB, giant components would use the alternating large-star/
-    small-star variant (same per-round shape, O(log n) rounds) and
-    reliable checkpoints instead of local ones.
-
-    r16 (VERDICT r15 item 5, guide §1.2 "don't compute things you throw
-    away"): the convergence check used to be its OWN job per round — a
-    join of the new labels back to the old plus a count, i.e. a second
-    full pass over two corpus-scale frames every iteration. Labels only
-    ever decrease, so `changed ⟺ nbr_min < cluster_id`, which is
-    computable ROW-LOCALLY inside the label-update projection; an
-    `observe()` metric (CollectMetrics rides the update job's existing
-    pass; Observation.get blocks until that job reports) returns the
-    changed-row count as a side output of the eager localCheckpoint
-    materialization. One job per round, zero extra passes, same
-    iteration count, value-identical labels (pinned by the oracle and
-    tests/test_dedup_convergence.py).
+    Plain min-label propagation (`label_propagation_components`,
+    `jump=False`): LSH cliques keep component diameters tiny, so the
+    pointer-jumping join would add a shuffle per round and save none.
+    The labels are independent of iteration order, which is why the
+    DuckDB recursive-CTE oracle (min doc_id over the transitive
+    closure) reproduces them exactly.
     """
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return label_propagation_components(docs, pairs)
 
 
-CC_MAX_ROUNDS = 50  # round cap of both connected-components loops
+CC_MAX_ROUNDS = 50  # round cap of the connected-components loop
 
 
 class ComponentsDidNotConverge(RuntimeError):
-    """A connected-components loop reached its round cap."""
+    """The connected-components loop reached its round cap."""
 
 
-def label_propagation_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """The min-label propagation loop behind `dedup_clusters`, factored
-    like `largestar_components`: `docs` = (doc_id), `pairs` =
-    (doc_a, doc_b) undirected; returns (doc_id, cluster_id,
-    is_canonical). One job per round, and (component diameter + 1)
-    rounds to converge; past `CC_MAX_ROUNDS` it raises
-    `ComponentsDidNotConverge` — chain-shaped components that long
-    belong on the O(log n)-round `largestar_components`."""
+def label_propagation_components(
+    docs: DataFrame, pairs: DataFrame, jump: bool = False
+) -> DataFrame:
+    """Connected components by min-label propagation: `docs` = (doc_id),
+    unique; `pairs` = (doc_a, doc_b) undirected; returns (doc_id,
+    cluster_id, is_canonical), cluster_id the component's minimum
+    doc_id.
+
+    Each round HOOKS every node to the minimum label over itself and
+    its neighbours. With `jump=True` it then JUMPS: each label L(v)
+    becomes L(L(v)), a self-join of the hooked labels on cluster_id =
+    doc_id (the shortcutting step of Stergiou et al., WSDM 2018). A
+    label never increases and always names a node of the same
+    component, so the fixpoint is the component minimum either way;
+    hooking alone needs (component diameter + 1) rounds, hooking plus
+    jumping about log2 of it (a 1,000-node chain: 10).
+
+    One driver action per round: the round's eager localCheckpoint
+    (its shuffle stages run as jobs of their own under adaptive
+    execution), which keeps
+    only (doc_id, cluster_id) and reports the number of lowered labels
+    as an `observe()` metric, so the convergence check costs no extra
+    pass. Past `CC_MAX_ROUNDS` it raises `ComponentsDidNotConverge`.
+    """
     from pyspark.sql import Observation
 
     edges = (
@@ -367,22 +382,29 @@ def label_propagation_components(docs: DataFrame, pairs: DataFrame) -> DataFrame
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("src_lbl").alias("nbr_min"))
         )
-        obs = Observation()
-        new_labels = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-                # new < old ⟺ new != old (labels are monotonically
-                # non-increasing); NULL nbr_min compares false
-                (F.col("nbr_min") < F.col("cluster_id")).alias("_changed"),
+        hooked = labels.join(nbr_min, "doc_id", "left").select(
+            "doc_id",
+            F.col("cluster_id").alias("_old"),
+            F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
+                "cluster_id"
+            ),
+        )
+        if jump:
+            hop = hooked.select(
+                F.col("doc_id").alias("cluster_id"), F.col("cluster_id").alias("_jump")
             )
-            .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n_changed"))
+            hooked = hooked.join(hop, "cluster_id").select(
+                "doc_id", "_old", F.col("_jump").alias("cluster_id")
+            )
+        obs = Observation()
+        lowered = F.sum((F.col("cluster_id") < F.col("_old")).cast("long"))
+        labels = (
+            hooked.observe(obs, lowered.alias("n_changed"))
+            .select("doc_id", "cluster_id")
             .localCheckpoint()
         )
-        labels = new_labels.drop("_changed")
+        # labels never increase, so "lowered" is "changed"; an empty
+        # docs frame sums to NULL
         if not obs.get["n_changed"]:
             return labels.withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
     raise ComponentsDidNotConverge(
@@ -392,147 +414,23 @@ def label_propagation_components(docs: DataFrame, pairs: DataFrame) -> DataFrame
 
 @query(
     "dedup_clusters_largestar",
-    oracle=f"""
-    WITH RECURSIVE {_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    walk(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.node = e.src
-    )
-    SELECT node AS doc_id, MIN(lbl) AS cluster_id,
-           (node = MIN(lbl)) AS is_canonical
-    FROM walk GROUP BY node
-    """,
+    oracle=_CLUSTERS_ORACLE,
     survey_ops="dedup,iterative,scale",
 )
 def dedup_clusters_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round giant-component-safe variant `dedup_clusters`'
-    docstring names as the 100 TB path, now implemented and gated
-    against the SAME recursive-CTE oracle (both must equal the
-    transitive-closure minimum, so the two formulations are proven
-    interchangeable on every gate run).
-
-    Why this exists next to label propagation: min-label propagation
-    converges in O(component diameter) rounds — fine for LSH cliques,
-    pathological for chain-shaped components (a 10M-doc chain needs
-    10M rounds). Star contraction instead rewires every node toward
-    its neighborhood minimum, halving component height per alternation:
-    worst-case O(log² n), in practice a handful of rounds regardless of
-    shape.
-
-    Per round: two groupBy-min + join passes over the edge list (edges
-    only ever shrink toward star form), `localCheckpoint` truncating
-    lineage; convergence = edge set fixpoint (r16: one symmetric-
-    difference emptiness job — a union + groupBy count over the two
-    checkpointed sets — instead of two exceptAll counting jobs).
-    All operations are min-based and set-valued — no iteration-order
-    dependence, which is what lets DuckDB's closure reproduce it
-    exactly. Isolated docs label themselves via the final left join.
+    """`dedup_clusters` through the chain-safe loop: the same components
+    by min-label propagation with a pointer-jumping step every round
+    (`label_propagation_components(…, jump=True)`), O(log diameter)
+    rounds instead of O(diameter) — the path for inputs whose
+    components can be long chains, which plain propagation could not
+    finish within `CC_MAX_ROUNDS`. The registered name is kept from the
+    large-star/small-star loop (Kiveris et al.) it once ran; hooking
+    plus jumping beat that loop on job count and time on every input
+    measured (ROADMAP, direction 3). Same oracle as `dedup_clusters`.
     """
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return largestar_components(docs, pairs)
-
-
-def largestar_components(
-    docs: DataFrame, pairs: DataFrame, stats: dict | None = None
-) -> DataFrame:
-    """The alternating star-contraction loop behind
-    `dedup_clusters_largestar`, factored so tests can drive it with
-    pathological topologies (chains, stars) the LSH clique graph never
-    produces. `docs` = (doc_id), `pairs` = (doc_a, doc_b) undirected;
-    returns (doc_id, cluster_id, is_canonical). Pass a `stats` dict to
-    receive {"rounds": N, "edges_in": E} — the scale probes record
-    convergence rounds without re-instrumenting the loop."""
-    edges = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("u"),
-            F.greatest("doc_a", "doc_b").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    if stats is not None:
-        stats["edges_in"] = edges.count()
-
-    def sym(e: DataFrame) -> DataFrame:
-        return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    for _round in range(CC_MAX_ROUNDS):
-        s = sym(edges)
-        # LARGE-STAR: every node links its strictly-greater neighbors
-        # to min(neighborhood ∪ self)
-        mins = s.groupBy("u").agg(F.min("v").alias("nmin"))
-        ls = (
-            s.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.least(F.col("u"), F.col("nmin")).alias("u"),
-                F.col("v").alias("v"),
-            )
-            .distinct()
-        )
-        # SMALL-STAR: every node links its strictly-smaller neighbors
-        # (and itself) to the minimum of those
-        sm = sym(ls).filter(F.col("v") < F.col("u"))
-        smins = sm.groupBy("u").agg(F.min("v").alias("m"))
-        star_self = smins.select(F.col("m").alias("u"), F.col("u").alias("v"))
-        star_nbrs = (
-            sm.join(smins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("v").alias("v"))
-        )
-        new_edges = (
-            star_self.unionByName(star_nbrs)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # r16 (VERDICT r15 item 5): edge-set fixpoint in ONE job instead
-        # of two exceptAll counts. Both sets are distinct() outputs, so
-        # an (u, v) group of the union has count 1 iff the edge is in
-        # exactly one set — the symmetric difference is empty iff no
-        # such group exists. isEmpty() short-circuits at the first
-        # difference; both inputs are localCheckpointed so the pass
-        # reads cached blocks, not the lineage.
-        converged = (
-            new_edges.unionByName(edges)
-            .groupBy("u", "v")
-            .count()
-            .filter(F.col("count") == 1)
-            .isEmpty()
-        )
-        edges = new_edges
-        if converged:
-            if stats is not None:
-                stats["rounds"] = _round + 1
-            break
-    else:
-        raise ComponentsDidNotConverge(
-            f"large-star/small-star did not converge in {CC_MAX_ROUNDS} rounds"
-        )
-
-    nbr_min = sym(edges).groupBy(F.col("u").alias("doc_id")).agg(
-        F.min("v").alias("nmin")
-    )
-    return (
-        docs.join(nbr_min, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.least(F.col("doc_id"), F.coalesce(F.col("nmin"), F.col("doc_id"))).alias(
-                "cluster_id"
-            ),
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
-    )
+    return label_propagation_components(docs, pairs, jump=True)
 
 
 # ---------------------------------------------------------------------------
@@ -651,17 +549,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_retention_report",
     oracle=f"""
-    WITH RECURSIVE {_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    walk(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.node = e.src
-    ),
+    WITH RECURSIVE {_WALK_CTES},
     labels AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY node)
     SELECT d.source, COUNT(*) AS n_docs,
            CAST(SUM(CASE WHEN l.doc_id = l.cluster_id THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -723,17 +611,7 @@ def _bucket_sql(key: str) -> str:
 @query(
     "cluster_aware_split",
     oracle=f"""
-    WITH RECURSIVE {_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    walk(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.node = e.src
-    ),
+    WITH RECURSIVE {_WALK_CTES},
     clusters AS (
         SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY node
     ),

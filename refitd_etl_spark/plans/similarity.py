@@ -23,7 +23,7 @@ from __future__ import annotations
 import os
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -2623,13 +2623,12 @@ def pq_codebook_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codebook drift audit (r12) — the monitoring leg of the index
     lifecycle: reconstruction error of the BASE corpus snapshot and
     the DELTA ingest batch, both under the FROZEN persisted trained
-    codebook (the one `_pq_trained` artifact, read through the
-    `PQ_TRAINED_CODES` store that encodes with it — the audit never
-    retrains, plan-pinned no-ExistingRDD in
-    tests/test_round12_plan_shapes.py). A delta whose mean_sq_err
-    drifts from the base's signals distribution shift: the codebook
-    no longer represents incoming data and the retrain/reindex
-    decision fires — the number production index maintenance runs per
+    codebook (the one `_pq_trained` artifact, read directly — no code
+    store is built — and the audit never retrains, plan-pinned
+    no-ExistingRDD in tests/test_round12_plan_shapes.py). A delta
+    whose mean_sq_err drifts from the base's signals distribution
+    shift: the codebook no longer represents incoming data and the
+    retrain/reindex decision fires — the number production index maintenance runs per
     ingest instead of discovering staleness through recall complaints.
     On the gate corpus the two snapshots are interleaved slices of one
     distribution, so their errors agree (CI pins the no-drift band);
@@ -2642,8 +2641,7 @@ def pq_codebook_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     two global rollups — no shuffle wider than the rollups, no
     training iteration, cost O(|corpus|) with the delta arm O(|delta|)
     when run per-ingest against the snap partition alone."""
-    cb_path = _pq_store(spark, sf_dir, PQ_TRAINED_CODES) + "/codebook"
-    cb = spark.read.parquet(cb_path)
+    cb = spark.read.parquet(_pq_trained(spark, sf_dir, "codebook"))
     e = table(spark, sf_dir, "embeddings")
     base = _pq_recon_arm(_pq_train_rows(_pq_append_base(e)), cb, "base")
     delta = _pq_recon_arm(_pq_train_rows(_pq_append_delta(e)), cb, "delta")
@@ -2699,7 +2697,7 @@ def _coarse_drift_oracle() -> str:
     """Per-snapshot assignment profile under the frozen coarse
     centroids — the `_pq_drift_oracle` pattern applied to the cid
     argmin: the shared coarse training CTEs (`_kmeans_cent_ctes`, the
-    SAME Lloyd chain `_km_train` persists into `<store>/centroids`),
+    SAME Lloyd chain `_km_train` persists as the trained centroids),
     then one assignment-rollup arm per snapshot predicate. Written at
     r13 beside the gate it checks; registered r14 (the pre-budgeted
     window slot). The SQL keeps the row_number argmin form — DuckDB
@@ -2753,11 +2751,12 @@ def coarse_centroid_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PQ sub-codebooks; this gate monitors the trained coarse level
     (the cid directory layout): each snapshot's assignment profile —
     count, decimal-exact mean and worst-case cosine to the NEAREST
-    frozen centroid, read back from the persisted `<store>/centroids`
-    artifact. A delta whose mean/min assignment cosine drops against
-    the base's signals cell geometry going stale: vectors land far
-    from every list, recall decays, cell occupancy skews — how IVF
-    actually degrades under distribution shift, and the reindex
+    frozen centroid, read back from the persisted trained-centroids
+    artifact (`_pq_trained`; no code store is built). A delta whose
+    mean/min assignment cosine drops against the base's signals cell
+    geometry going stale: vectors land far from every list, recall
+    decays, cell occupancy skews — how IVF actually degrades under
+    distribution shift, and the reindex
     (re-train centroids) decision number, distinct from the codebook
     gate's re-quantize number. Reference analog J8
     (src/ai/embeddings.py:464-513 — pgvector ivfflat lists likewise
@@ -2791,8 +2790,7 @@ def coarse_centroid_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The audit consumes only the winning cosine: the max of struct
     # (cos, -cid) carries the max cos, NaN ordered largest either way
     # (tests/test_argmax_semantics.py).
-    root = _pq_store(spark, sf_dir, IVF_PQ_TRAINED_STORE)
-    pcent = spark.read.parquet(root + "/centroids")
+    pcent = spark.read.parquet(_pq_trained(spark, sf_dir, "centroids"))
     e = table(spark, sf_dir, "embeddings")
     arms = []
     for name, batch in (("base", _pq_append_base(e)), ("delta", _pq_append_delta(e))):
@@ -3072,7 +3070,14 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented mitigation restores ~linear cost.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _km_train(e)
+    return _semdedup_keep(e, _km_train(e))
+
+
+def _semdedup_keep(e: DataFrame, cent: DataFrame, probe: Column | None = None) -> DataFrame:
+    """The SemDeDup keep rule over `e` (vec_id, embedding) assigned to
+    the centroids `cent`: each vector passing `probe` (all of them when
+    None) gets (vec_id, cid, dup_of, keep), dup_of the minimum
+    smaller-id vector of its cluster within cosine ≥ SEMDEDUP_TAU."""
     # cache: `av` feeds BOTH pair sides and the final join — without
     # it the whole kmeans-assignment lineage re-executes three times
     # per run (measured 7.3s -> ~4s at bench sf0.1). The gated entry's
@@ -3089,13 +3094,14 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_nrm", V.norm(F.col("embedding")))
         .cache()
     )
+    probed = av if probe is None else av.filter(probe)
     aa = av.select(
         F.col("vec_id").alias("dup_of"),
         "cid",
         F.col("embedding").alias("_ea"),
         F.col("_nrm").alias("_na"),
     )
-    bb = av.select(
+    bb = probed.select(
         "vec_id", "cid", F.col("embedding").alias("_eb"), F.col("_nrm").alias("_nb")
     )
     dup = (
@@ -3108,7 +3114,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.min("dup_of").alias("dup_of"))
     )
-    return av.join(dup, "vec_id", "left").select(
+    return probed.join(dup, "vec_id", "left").select(
         "vec_id", "cid", "dup_of", F.col("dup_of").isNull().alias("keep")
     )
 
@@ -3187,39 +3193,5 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     |delta|.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base = e.filter(F.col("vec_id") < SEMDEDUP_BASE)
-    cent = _km_train(base)
-    # same cache rationale as semantic_dedup_clusters: av feeds three
-    # consumers
-    # r15 norm hoist — same rationale and IEEE-identity argument as
-    # semantic_dedup_clusters: per-vector norms into the cached `av`,
-    # the pair step evaluates only the zip_with dot.
-    av = (
-        e.join(_km_assign(e, cent), "vec_id")
-        .withColumn("_nrm", V.norm(F.col("embedding")))
-        .cache()
-    )
-    aa = av.select(
-        F.col("vec_id").alias("dup_of"),
-        "cid",
-        F.col("embedding").alias("_ea"),
-        F.col("_nrm").alias("_na"),
-    )
-    delta_b = av.filter(F.col("vec_id") >= SEMDEDUP_BASE).select(
-        "vec_id", "cid", F.col("embedding").alias("_eb"), F.col("_nrm").alias("_nb")
-    )
-    dup = (
-        aa.join(delta_b, "cid")
-        .filter(F.col("dup_of") < F.col("vec_id"))
-        .filter(
-            V.dot(F.col("_ea"), F.col("_eb")) / (F.col("_na") * F.col("_nb"))
-            >= SEMDEDUP_TAU
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dup_of").alias("dup_of"))
-    )
-    return (
-        av.filter(F.col("vec_id") >= SEMDEDUP_BASE)
-        .join(dup, "vec_id", "left")
-        .select("vec_id", "cid", "dup_of", F.col("dup_of").isNull().alias("keep"))
-    )
+    cent = _km_train(e.filter(F.col("vec_id") < SEMDEDUP_BASE))
+    return _semdedup_keep(e, cent, probe=F.col("vec_id") >= SEMDEDUP_BASE)

@@ -42,7 +42,7 @@ def main() -> None:
         BAND_SIZE,
         LSH_HOT_BUCKET,
         N_BANDS,
-        largestar_components,
+        label_propagation_components,
         minhash_lsh_pairs,
     )
     from refitd_etl_spark.session import get_spark
@@ -133,19 +133,21 @@ def main() -> None:
     out["minhash_lsh_s"] = round(time.perf_counter() - t0, 1)
     out["n_pairs"] = n_pairs
 
-    # stage 2: components (the 100 TB largestar path), rounds recorded
+    # stage 2: components (the chain-safe jumping loop), its Spark jobs
+    # counted under one job group
+    sc = spark.sparkContext
     t0 = time.perf_counter()
     pairs2 = minhash_lsh_pairs(spark, scaled).select("doc_a", "doc_b")
     d = spark.read.parquet(os.path.join(scaled, "documents.parquet")).select("doc_id")
-    stats: dict = {}
-    comp = largestar_components(d, pairs2, stats=stats)
+    sc.setJobGroup("dedup-chain-components", "label_propagation_components")
+    comp = label_propagation_components(d, pairs2, jump=True)
+    sc.setJobGroup(None, None)
     agg = comp.agg(
         F.count("*").alias("n_docs"),
         F.countDistinct("cluster_id").alias("n_clusters"),
     ).first()
     out["components_s"] = round(time.perf_counter() - t0, 1)
-    out["largestar_rounds"] = stats.get("rounds")
-    out["edges_in"] = stats.get("edges_in")
+    out["components_jobs"] = len(sc.statusTracker().getJobIdsForGroup("dedup-chain-components"))
     out["n_clusters"] = int(agg["n_clusters"])
     out["docs_labeled"] = int(agg["n_docs"])
 

@@ -1,13 +1,13 @@
-"""r16 convergence-check piggyback (VERDICT r15 item 5): pins for the
-two Spark facts the rewrite rests on.
+"""Pins for the connected-components loop
+(`plans/dedup.label_propagation_components`) and the Spark facts it
+rests on.
 
-`dedup_clusters` now reads its per-round changed-count from an
-`observe()` metric collected during the eager localCheckpoint
-materialization (one job per round, no join-back count job);
-`largestar_components` tests its edge-set fixpoint with ONE
-symmetric-difference emptiness job instead of two exceptAll counts.
-Value identity of both queries is pinned by the sf0.001 oracle-parity
-suite; these tests pin the mechanisms.
+Each round reads its count of lowered labels from an `observe()`
+metric collected during the round's eager localCheckpoint (one
+action per round, no join-back count job), and that checkpoint keeps
+only (doc_id, cluster_id). Value identity of both registered callers
+is pinned by the sf0.001 oracle-parity suite; these tests pin the
+mechanism and the round bounds of both `jump` modes.
 """
 
 from __future__ import annotations
@@ -34,9 +34,9 @@ def test_observe_metric_fires_on_eager_local_checkpoint(spark):
 
 
 def test_observe_sum_none_when_all_null(spark):
-    """The loop treats a NULL sum as converged: `nbr_min < cluster_id`
-    is NULL when nbr_min is NULL (isolated nodes), and an all-NULL sum
-    is NULL — the zero-edges graph must terminate after one round."""
+    """The loop treats a NULL sum as converged: a sum over no non-NULL
+    value is NULL — an empty docs frame must terminate after one
+    round."""
     obs = Observation()
     (
         spark.range(10)
@@ -48,9 +48,9 @@ def test_observe_sum_none_when_all_null(spark):
 
 
 def test_changed_condition_equals_label_inequality(spark):
-    """new != old ⟺ nbr_min < old, given new = least(old,
-    coalesce(nbr_min, old)) — the row-local rewrite of the retired
-    join-back convergence count, including the NULL case."""
+    """new != old ⟺ new < old, given new = least(old,
+    coalesce(nbr_min, old)) — the loop's lowered-label count is its
+    changed-label count, including the NULL-neighbour case."""
     rows = spark.createDataFrame(
         [(10, 3), (10, 10), (10, 15), (10, None)],
         "cluster_id long, nbr_min long",
@@ -60,34 +60,9 @@ def test_changed_condition_equals_label_inequality(spark):
         F.least(
             F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
         ).alias("new_lbl"),
-        (F.col("nbr_min") < F.col("cluster_id")).alias("_changed"),
-    )
+    ).withColumn("_changed", F.col("new_lbl") < F.col("cluster_id"))
     for r in rows.collect():
         assert bool(r._changed) == (r.new_lbl != r.cluster_id), r
-
-
-def test_symmetric_difference_emptiness_matches_exceptall(spark):
-    """The large-star fixpoint test: for two distinct() edge sets,
-    union + groupBy count==1 is empty iff both exceptAll directions
-    are empty — equal sets, subset, superset, disjoint, overlap."""
-    def edges(pairs):
-        return spark.createDataFrame(pairs, "u long, v long").distinct()
-
-    cases = [
-        ([(1, 2), (3, 4)], [(1, 2), (3, 4)]),   # equal
-        ([(1, 2)], [(1, 2), (3, 4)]),           # subset
-        ([(1, 2), (3, 4)], [(1, 2)]),           # superset
-        ([(1, 2)], [(3, 4)]),                   # disjoint
-        ([(1, 2), (5, 6)], [(1, 2), (7, 8)]),   # overlap
-    ]
-    for a_pairs, b_pairs in cases:
-        a, b = edges(a_pairs), edges(b_pairs)
-        one_job = (
-            a.unionByName(b).groupBy("u", "v").count()
-            .filter(F.col("count") == 1).isEmpty()
-        )
-        two_jobs = a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-        assert one_job == two_jobs, (a_pairs, b_pairs)
 
 
 def _chain(spark, n):
@@ -120,3 +95,55 @@ def test_label_propagation_raises_past_its_cap(spark, monkeypatch):
     docs, pairs = _chain(spark, 10)
     with pytest.raises(dedup.ComponentsDidNotConverge, match="4 rounds"):
         dedup.label_propagation_components(docs, pairs)
+
+
+def test_jump_converges_on_a_long_chain_within_its_cap(spark, monkeypatch):
+    """Hooking plus pointer jumping needs about log2(diameter) rounds:
+    a 1,000-node chain, 1,000 rounds for plain propagation, converges
+    in 10, so a 12-round cap holds it."""
+    from refitd_etl_spark.plans import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 12)
+    docs, pairs = _chain(spark, 1000)
+    rows = dedup.label_propagation_components(docs, pairs, jump=True).collect()
+    assert len(rows) == 1000
+    assert all(r.cluster_id == 0 and r.is_canonical == (r.doc_id == 0) for r in rows)
+
+
+def test_jump_raises_past_its_cap(spark, monkeypatch):
+    """The jumping loop is bounded by the same cap and the same named
+    error."""
+    import pytest
+
+    from refitd_etl_spark.plans import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 4)
+    docs, pairs = _chain(spark, 1000)
+    with pytest.raises(dedup.ComponentsDidNotConverge, match="4 rounds"):
+        dedup.label_propagation_components(docs, pairs, jump=True)
+
+
+def test_round_checkpoint_keeps_two_columns(spark, monkeypatch):
+    """Every frame the loop checkpoints (the edge list, then one label
+    frame per round) holds two columns: the changed flag rides the
+    observe() aggregate, never the checkpointed rows."""
+    from refitd_etl_spark.plans import dedup
+
+    docs, pairs = _chain(spark, 6)
+    cls = type(docs)
+    real = cls.localCheckpoint
+    for jump in (False, True):
+        seen: list[list[str]] = []
+
+        def recording(self, *args, **kwargs):
+            seen.append(self.columns)
+            return real(self, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(cls, "localCheckpoint", recording)
+            dedup.label_propagation_components(docs, pairs, jump=jump)
+        assert seen[0] == ["src", "dst"], jump
+        assert len(seen) >= 3 and all(c == ["doc_id", "cluster_id"] for c in seen[1:]), (
+            jump,
+            seen,
+        )

@@ -128,6 +128,21 @@ def test_incremental_run_with_new_products(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 6
 
 
+def test_empty_batch_into_empty_store(spark, tmp_path):
+    """An empty batch into a store with no tables yet creates the
+    tables empty, with the schema a real run writes, and a later run
+    merges into them."""
+    store_dir = str(tmp_path / "store")
+    empty = run_pipeline(spark, bronze_fixture(spark).limit(0), store_dir)
+    assert empty.n_candidates == empty.n_new == 0
+    assert empty.products.count() == empty.tracking.count() == 0
+    full = run_pipeline(spark, bronze_fixture(spark), store_dir)
+    assert full.n_new == 6
+    assert full.products.count() == full.tracking.count() == 6
+    assert empty.products.schema.simpleString() == full.products.schema.simpleString()
+    assert empty.tracking.schema.simpleString() == full.tracking.schema.simpleString()
+
+
 # Spark jobs of a backfill of the fixture into an empty store: the silver
 # checkpoint and its count, the final checkpoint (its shuffle stages run
 # as jobs of their own under adaptive execution), two upsert writes with

@@ -2,7 +2,8 @@
 is built once per (spec, input fingerprint) and served many times; a
 rewritten embeddings table is never served from an index built over
 its old contents; and each trained level is trained once per input
-and shared by every trained store and both drift audits."""
+and shared by every trained store and both drift audits, which read
+it without building a store."""
 
 from __future__ import annotations
 
@@ -86,3 +87,15 @@ def test_trained_levels_train_once_per_input(spark, emb_copy, monkeypatch):
     for name in SERVING + AUDITS:
         assert ALL_QUERIES[name].fn(spark, emb_copy).collect()
     assert calls == {"_km_train": 1, "_pq_train_cb": 1}
+
+
+def test_drift_audits_build_no_code_store(spark, emb_copy):
+    """Both drift audits read their trained artifact directly: on a
+    fresh input they leave the two trained artifacts in the memo and
+    no code store."""
+    fp = sim._input_fingerprint(emb_copy)
+    for name in AUDITS:
+        assert ALL_QUERIES[name].fn(spark, emb_copy).collect()
+    built = [k[0] for k in sim._PQ_BUILT if k[1] == fp]
+    assert not [k for k in built if isinstance(k, sim.PQStoreSpec)], built
+    assert sorted(built) == ["centroids", "codebook"]

@@ -188,7 +188,7 @@ def test_drift_audit_reads_frozen_codebook_and_never_trains(spark, sf_dir):
 
     df = ALL_QUERIES["pq_codebook_drift_audit"].raw(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert any("pq_trained_codes_" in ln and "/codebook" in ln
+    assert any("pq_trained_codebook_" in ln and "/codebook" in ln
                for ln in plan.splitlines()), plan
     assert "ExistingRDD" not in plan and "Scan rdd" not in plan, plan
 

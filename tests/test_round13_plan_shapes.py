@@ -113,7 +113,7 @@ def test_coarse_drift_arm_matches_duckdb(spark, sf_dir, duck):
 
 
 def test_coarse_drift_arm_reads_frozen_centroids_and_never_trains(spark, sf_dir):
-    """The arm must audit under the PERSISTED `<store>/centroids`
+    """The arm must audit under the PERSISTED trained-centroids
     artifact — a parquet scan in the plan — and never re-run the Lloyd
     iterations (no localCheckpoint residue)."""
     from refitd_etl_spark.plans.similarity import coarse_centroid_drift_audit
@@ -125,7 +125,7 @@ def test_coarse_drift_arm_reads_frozen_centroids_and_never_trains(spark, sf_dir)
         .toString()
     )
     assert any(
-        "ivf_pq_trained_store_" in ln and "/centroids" in ln
+        "pq_trained_centroids_" in ln and "/centroids" in ln
         for ln in plan.splitlines()
     ), plan
     assert "ExistingRDD" not in plan and "Scan rdd" not in plan, plan

@@ -83,7 +83,7 @@ def test_coarse_drift_gate_plan_is_windowless_and_reads_frozen_centroids(
     assert "array_max(transform(_cents#" in plan, plan
     assert "hashpartitioning(vec_id" not in plan, plan
     assert any(
-        "ivf_pq_trained_store_" in ln and "/centroids" in ln
+        "pq_trained_centroids_" in ln and "/centroids" in ln
         for ln in plan.splitlines()
     ), plan
     assert "ExistingRDD" not in plan and "Scan rdd" not in plan, plan

@@ -97,14 +97,14 @@ def test_changed_queries_catches_shared_helper_edits():
     assert "streaming_hourly_rollup" in changed  # via _await_gate
 
 
-def test_largestar_handles_chain_and_star_topologies(spark):
-    """Star contraction must label pathological shapes correctly in
-    few rounds — a 64-node CHAIN (the worst case for min-label
-    propagation: O(n) rounds) plus a star and isolated nodes, all in
-    one graph. Every node must land on its component minimum."""
-    from pyspark.sql import functions as F
-
-    from refitd_etl_spark.plans.dedup import largestar_components
+def test_largestar_handles_chain_and_star_topologies(spark, monkeypatch):
+    """The connected-components loop, with and without pointer jumping,
+    must label pathological shapes correctly — a 64-node CHAIN (the
+    worst case for plain min-label propagation: 64 rounds, so that mode
+    runs under a 64-round cap; with jumping it takes a handful) plus a
+    star and isolated nodes, all in one graph. Every node must land on
+    its component minimum."""
+    from refitd_etl_spark.plans import dedup
 
     # chain 0-1-2-...-63, star 100<-{101..110}, isolates 200, 201
     chain = [(i, i + 1) for i in range(63)]
@@ -112,13 +112,17 @@ def test_largestar_handles_chain_and_star_topologies(spark):
     nodes = list(range(64)) + list(range(100, 111)) + [200, 201]
     docs = spark.createDataFrame([(n,) for n in nodes], "doc_id long")
     pairs = spark.createDataFrame(chain + star, "doc_a long, doc_b long")
-    got = {
-        r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-        for r in largestar_components(docs, pairs).collect()
-    }
-    assert all(got[i] == (0, i == 0) for i in range(64))
-    assert all(got[i] == (100, i == 100) for i in range(100, 111))
-    assert got[200] == (200, True) and got[201] == (201, True)
+    for jump in (False, True):
+        with monkeypatch.context() as m:
+            if not jump:
+                m.setattr(dedup, "CC_MAX_ROUNDS", 64)
+            got = {
+                r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+                for r in dedup.label_propagation_components(docs, pairs, jump=jump).collect()
+            }
+        assert all(got[i] == (0, i == 0) for i in range(64)), jump
+        assert all(got[i] == (100, i == 100) for i in range(100, 111)), jump
+        assert got[200] == (200, True) and got[201] == (201, True), jump
 
 
 def test_round5_queries_prune_columns(spark, sf_dir):
@@ -156,12 +160,13 @@ def test_round5_queries_prune_columns(spark, sf_dir):
 
 def test_largestar_random_graphs_match_union_find(spark):
     """Property-style check on deterministic pseudo-random graphs (md5
-    edge selection — no banned random()): star contraction must agree
-    with a pure-Python union-find reference on every node, across
-    densities from forest-sparse to near-complete."""
+    edge selection — no banned random()): the connected-components
+    loop, with and without pointer jumping, must agree with a
+    pure-Python union-find reference on every node, across densities
+    from forest-sparse to near-complete."""
     import hashlib
 
-    from refitd_etl_spark.plans.dedup import largestar_components
+    from refitd_etl_spark.plans.dedup import label_propagation_components
 
     def h(i, j):  # deterministic edge coin
         return int(hashlib.md5(f"{i}-{j}".encode()).hexdigest(), 16) % 100
@@ -188,12 +193,13 @@ def test_largestar_random_graphs_match_union_find(spark):
         docs = spark.createDataFrame([(x,) for x in nodes], "doc_id long")
         pairs = spark.createDataFrame(
             edges or [(0, 0)], "doc_a long, doc_b long"
-        )  # (0,0) self-loop is filtered out inside — empty-edge stand-in
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in largestar_components(docs, pairs).collect()
-        }
-        assert got == want, f"density={density}"
+        )  # a (0,0) self-loop changes no label — empty-edge stand-in
+        for jump in (False, True):
+            got = {
+                r["doc_id"]: r["cluster_id"]
+                for r in label_propagation_components(docs, pairs, jump=jump).collect()
+            }
+            assert got == want, f"density={density} jump={jump}"
 
 
 def test_decile_diagnostics_align_with_gate(spark, sf_dir):
