@@ -20,29 +20,47 @@ from . import llmprep  # noqa: E402,F401
 # The correctness driver checks the FIRST ~50 registered queries per
 # round in dict order, so queries changed since the last round boundary
 # (817e5b5) sit FIRST, in scripts/changed_queries.py's AST-attributed
-# closure (shared-helper edits propagated). This change set has 73
-# members, more than the window holds: the queries whose plans this
-# change alters lead, and the window is saturated with the rest, which
-# the tool dirties conservatively. The dynamic containment test
+# closure (shared-helper edits propagated). This change set has
+# 170 members, more than the window holds: `sources/registry.table`
+# changed, so every query that reads a table is in it. The queries
+# whose plan code this change alters lead, and the window is saturated
+# with the rest. The dynamic containment test
 # (tests/test_round5_plan_shapes.py) re-derives the changed set on
 # every pytest run and asserts the window is saturated with it.
 # Changed-set provenance (oracles byte-unchanged):
-# - the four connected-components consumers: one label-propagation
-#   loop, a pointer-jumping step for dedup_clusters_largestar, a
-#   2-column round checkpoint; both drift audits read their trained
-#   artifact without building a code store; both SemDeDup queries share
-#   one keep-rule helper; the sensor queries and pipeline_end_to_end
-#   share one representative/fan-out helper (plans unchanged), and an
-#   empty batch into an empty store creates the tables.
-# - earlier in the round: the four tag-policy consumers (staged SQL
-#   text), transform_products_silver (P18 map lookup), the pipeline
-#   sinks (silver materialized once, new-table upserts, merged JSON
-#   store), the six PQ code-store serves (one spec-keyed store
-#   builder), the IVF queries' seed-centroid helper, and neighbours
-#   dirtied by module-level edits.
+# - the eight bench queries, planned from SQL text; the queries that
+#   call `dec_sum`, which now takes and returns SQL text; the two skew
+#   guards sized from the footer row count (`row_count`); every table
+#   read: a known schema, and single-row-group sources read as one
+#   split file per core.
+# - earlier in the round: one label-propagation loop for the four
+#   connected-components consumers, the drift audits reading their
+#   trained artifact, the SemDeDup keep rule, the sensor fan-out
+#   helper, the tag-policy consumers (staged SQL text),
+#   transform_products_silver (P18 map lookup), the pipeline sinks, the
+#   six PQ code-store serves and the IVF seed-centroid helper.
 _PRIORITY: tuple[str, ...] = (
     # regenerate with `python scripts/changed_queries.py` after any
     # helper edit
+    "pricing_summary",
+    "category_summary",
+    "customer_revenue_topk",
+    "hourly_event_rollup",
+    "doc_text_stats",
+    "ngram_jaccard_pairs",
+    "minhash_lsh_pairs",
+    "embedding_topk",
+    "embedding_neighbors",
+    "lookup_join_rollup",
+    "global_stats",
+    "value_histogram",
+    "region_nation_rollup",
+    "priority_status_cube",
+    "salted_segment_rollup",
+    "customer_revenue_deciles",
+    "priority_status_grouping_sets",
+    "revenue_decile_scalable",
+    "streaming_dim_enrichment",
     "dedup_clusters",
     "dedup_clusters_largestar",
     "dedup_retention_report",
@@ -75,7 +93,6 @@ _PRIORITY: tuple[str, ...] = (
     "embedding_kmeans_clusters",
     "ivf_kmeans_topk",
     "price_text_parse",
-    "doc_text_stats",
     "language_id_confusion",
     "word_topk",
     "doc_fingerprint",
@@ -88,8 +105,6 @@ _PRIORITY: tuple[str, ...] = (
     "gopher_rule_funnel",
     "tfidf_top_terms",
     "source_overlap_matrix",
-    "embedding_topk",
-    "embedding_neighbors",
     "embedding_lsh_buckets",
     "mmr_diversified_topk",
     "embedding_norm_stats",
@@ -116,6 +131,87 @@ _PRIORITY: tuple[str, ...] = (
     "token_budget_allocation",
     "quota_downsample",
     "mixture_temperature_weights",
+    "scan_filter_topn",
+    "anti_join_untracked",
+    "semi_join_tracked",
+    "rep_variant_per_group",
+    "latest_event_per_user",
+    "status_ratio_summary",
+    "priority_ordinal_distribution",
+    "multi_order_customers",
+    "priority_churn",
+    "brand_type_vocabulary",
+    "segment_top_orders",
+    "cheapest_supplier_per_part",
+    "sketch_profile",
+    "order_status_melt",
+    "order_price_mad_outliers",
+    "value_equidepth_histogram",
+    "order_fulfillment_latency",
+    "supplier_concentration_hhi",
+    "part_velocity_share",
+    "nation_trade_flows",
+    "customer_cohort_setops",
+    "priority_price_rank_families",
+    "customer_order_delta_fulljoin",
+    "incremental_view_maintenance",
+    "segment_distinct_users_sketch",
+    "token_cost_by_source",
+    "stratified_sample",
+    "bpe_token_counts",
+    "contamination_check",
+    "documents_profile",
+    "exact_dedup",
+    "simhash_fingerprints",
+    "simhash_near_pairs",
+    "lsh_recall_report",
+    "lsh_threshold_calibration",
+    "user_sessionization",
+    "freshness_decay",
+    "refresh_queue_priorities",
+    "props_json_rollup",
+    "asof_click_before_purchase",
+    "range_join_bursts",
+    "daily_revenue_moving",
+    "rollup_cascade",
+    "funnel_conversion",
+    "cohort_retention",
+    "weekly_revenue_growth",
+    "props_variant_rollup",
+    "user_state_intervals",
+    "streaming_hourly_rollup_multibatch",
+    "streaming_hopping_rollup_multibatch",
+    "streaming_event_dedup_multibatch",
+    "streaming_stateful_tracker_multibatch",
+    "first_touch_attribution",
+    "event_gap_detection",
+    "dau_wau_stickiness",
+    "rolling_3h_event_counts",
+    "event_debounce",
+    "point_in_time_join",
+    "streaming_interval_join_multibatch",
+    "streaming_left_interval_join_multibatch",
+    "semantic_search_topk",
+    "rag_context_assembly",
+    "media_inventory",
+    "media_byte_features",
+    "frame_sample_schedule",
+    "media_thumbnail_resize",
+    "media_audio_features",
+    "media_video_metadata",
+    "media_video_frames",
+    "media_exact_dedup",
+    "media_jpeg_decode",
+    "media_jpeg_color_decode",
+    "media_webp_metadata",
+    "media_gif_metadata",
+    "training_export_scale",
+    "compaction_plan",
+    "zorder_layout_plan",
+    "zorder_skipping_report",
+    "dq_expectations",
+    "bucketed_join_rollup",
+    "embedding_int8_quant",
 )
 
 

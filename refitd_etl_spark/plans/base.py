@@ -84,8 +84,8 @@ def query(name: str, oracle: str | None, survey_ops: str, bench: bool = False):
     return deco
 
 
-def dec_sum(col, scale: int = 2, precision: int = 28):
-    """Order-independent SUM of a double column: exact decimal sum → double."""
-    from pyspark.sql import functions as F
-
-    return F.sum(col.cast(f"decimal({precision},{scale})")).cast("double")
+def dec_sum(expr: str, scale: int = 2, precision: int = 28) -> str:
+    """Order-independent SUM of a double SQL expression, as SQL text:
+    exact decimal sum → double. Wrap it in ``F.expr`` where a Column is
+    needed."""
+    return f"CAST(sum(CAST({expr} AS DECIMAL({precision},{scale}))) AS DOUBLE)"

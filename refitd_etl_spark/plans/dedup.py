@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.registry import parallel_docs, table
+from ..sources.registry import parallel_docs, row_count, table
 from .base import query
 
 N_HASHES = 12
@@ -65,21 +65,16 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallel_docs(spark, sf_dir)
     # stage the split: element_at(toks, ...) inside the lambda would
     # re-evaluate it per element (the 447x staged-projection lesson)
-    base = d.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("toks"))
-    toks = F.col("toks")
+    base = d.selectExpr("doc_id", "split(lower(text), ' ') AS toks")
     # shingle i (0-based) = toks[i] toks[i+1] toks[i+2], i in [0, n-3]
-    grams = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 3),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2), F.element_at(toks, i + 3)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = (
+        "CASE WHEN size(toks) >= 3 THEN transform(sequence(0, size(toks) - 3), x -> concat_ws("
+        "' ', element_at(toks, x + 1), element_at(toks, x + 2), element_at(toks, x + 3)))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
     # per-row array_distinct == global DISTINCT here (the key includes
     # doc_id), but costs zero shuffle instead of a 4.7M-row exchange
-    return base.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle")).cache()
+    return base.selectExpr("doc_id", f"explode(array_distinct({grams})) AS shingle").cache()
 
 
 @query(
@@ -129,25 +124,24 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~n²/2^65) is ~1e-11, far below any other error source. Output
     columns are unchanged.
     """
-    sh = _shingles(spark, sf_dir).select("doc_id", F.xxhash64("shingle").alias("h"))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "h")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "h")
+    sh = _shingles(spark, sf_dir).selectExpr("doc_id", "xxhash64(shingle) AS h")
+    sizes = sh.groupBy("doc_id").agg(F.expr("count(*) AS n"))
+    a = sh.selectExpr("doc_id AS doc_a", "h")
+    b = sh.selectExpr("doc_id AS doc_b", "h")
     pairs = (
         a.join(b, "h")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        .filter("doc_a < doc_b")
         .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
+        .agg(F.expr("count(*) AS n_common"))
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    na = sizes.selectExpr("doc_id AS doc_a", "n AS n_a")
+    nb = sizes.selectExpr("doc_id AS doc_b", "n AS n_b")
+    jaccard = "CAST(n_common AS DOUBLE) / (n_a + n_b - n_common)"
     return (
         pairs.join(na, "doc_a")
         .join(nb, "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.2)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
+        .selectExpr("doc_a", "doc_b", "n_common", f"{jaccard} AS jaccard")
+        .filter("jaccard >= 0.2D")
     )
 
 
@@ -159,15 +153,8 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     second exchange. Map-side partial aggregation reduces each partition
     to one row per doc before the exchange.
     """
-    sh = _shingles(spark, sf_dir)
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}")
-        for i in range(N_HASHES)
-    ]
-    per_doc = sh.groupBy("doc_id").agg(*mins)
-    return per_doc.select(
-        "doc_id", F.array(*[F.col(f"mh{i}") for i in range(N_HASHES)]).alias("sig")
-    )
+    mins = ", ".join(f"min(md5(concat('{i}:', shingle)))" for i in range(N_HASHES))
+    return _shingles(spark, sf_dir).groupBy("doc_id").agg(F.expr(f"array({mins}) AS sig"))
 
 
 _SIG_SQL = f"""
@@ -256,7 +243,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW-COUNT GATED (r5, VERDICT r4 item 4): its fixed job cost was
     67% of this query's runtime at bench sf0.1, so `guard_if_large`
     engages the guard only when the band table (docs × N_BANDS, from
-    the parquet metadata count — no data read) is big enough to
+    the registry's footer row count — no Spark job) is big enough to
     amortize it; below that the plan is the plain equi-join,
     byte-identical to pre-guard rounds. Semantics-identical on every
     path (the oracle is unchanged); tests/test_skew.py pins
@@ -265,23 +252,15 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.skew import guard_if_large
 
-    n_docs = table(spark, sf_dir, "documents").count()  # metadata-only
+    n_docs = row_count(spark, sf_dir, "documents")
     sigs = _minhash_sigs(spark, sf_dir).cache()
-    band_idx = F.array(*[F.lit(i) for i in range(N_BANDS)])
-    bands = sigs.select(
-        "doc_id",
-        F.explode(band_idx).alias("band"),
-        F.col("sig"),
-    ).select(
-        "doc_id",
-        "band",
-        F.concat_ws(
-            "|", F.slice(F.col("sig"), F.col("band") * BAND_SIZE + 1, BAND_SIZE)
-        ).alias("band_sig"),
+    band_idx = ", ".join(str(i) for i in range(N_BANDS))
+    band_sig = f"concat_ws('|', slice(sig, band * {BAND_SIZE} + 1, {BAND_SIZE}))"
+    bands = sigs.selectExpr("doc_id", f"explode(array({band_idx})) AS band", "sig").selectExpr(
+        "doc_id", "band", f"xxhash64(band, {band_sig}) AS band_h"
     )
-    bands = bands.withColumn("band_h", F.xxhash64("band", "band_sig")).drop("band_sig")
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_h")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_h")
+    a = bands.selectExpr("doc_id AS doc_a", "band", "band_h")
+    b = bands.selectExpr("doc_id AS doc_b", "band", "band_h")
     cand = (
         guard_if_large(
             a,
@@ -290,24 +269,20 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             driving_rows=n_docs * N_BANDS,
             hot_threshold=LSH_HOT_BUCKET,
         )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        .filter("doc_a < doc_b")
+        .selectExpr("doc_a", "doc_b")
         .distinct()
     )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    n_match = F.size(
-        F.filter(
-            F.sequence(F.lit(1), F.lit(N_HASHES)),
-            lambda i: F.element_at(F.col("sig_a"), i) == F.element_at(F.col("sig_b"), i),
-        )
+    sa = sigs.selectExpr("doc_id AS doc_a", "sig AS sig_a")
+    sb = sigs.selectExpr("doc_id AS doc_b", "sig AS sig_b")
+    n_match = (
+        f"size(filter(sequence(1, {N_HASHES}), x -> element_at(sig_a, x) = element_at(sig_b, x)))"
     )
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("est_jaccard", n_match.cast("double") / N_HASHES)
-        .filter(n_match >= BAND_SIZE)
-        .select("doc_a", "doc_b", "est_jaccard")
+        .filter(f"{n_match} >= {BAND_SIZE}")
+        .selectExpr("doc_a", "doc_b", f"CAST({n_match} AS DOUBLE) / {N_HASHES} AS est_jaccard")
     )
 
 

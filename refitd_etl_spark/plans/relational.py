@@ -63,17 +63,24 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     `file_loader.generate_summary` (file_loader.py:232-270) and the
     `category_summary` SQL view (docs/supabase_schema.sql:138-147).
     """
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    li = table(spark, sf_dir, "lineitem").filter(
+        "l_shipdate <= CAST('1998-09-02 00:00:00' AS TIMESTAMP)"
+    )
+    disc_price = "l_extendedprice * (1 - l_discount)"
+    charge = f"{disc_price} * (l_tax + 1)"
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        dec_sum(F.col("l_quantity")).alias("sum_qty"),
-        dec_sum(F.col("l_extendedprice")).alias("sum_base_price"),
-        dec_sum(disc_price, scale=6).alias("sum_disc_price"),
-        dec_sum(charge, scale=8).alias("sum_charge"),
-        (dec_sum(F.col("l_quantity")) / F.count("*")).alias("avg_qty"),
-        (dec_sum(F.col("l_extendedprice")) / F.count("*")).alias("avg_price"),
-        F.count("*").alias("count_order"),
+        *map(
+            F.expr,
+            (
+                f"{dec_sum('l_quantity')} AS sum_qty",
+                f"{dec_sum('l_extendedprice')} AS sum_base_price",
+                f"{dec_sum(disc_price, scale=6)} AS sum_disc_price",
+                f"{dec_sum(charge, scale=8)} AS sum_charge",
+                f"{dec_sum('l_quantity')} / count(*) AS avg_qty",
+                f"{dec_sum('l_extendedprice')} / count(*) AS avg_price",
+                "count(*) AS count_order",
+            ),
+        )
     )
 
 
@@ -99,11 +106,16 @@ def category_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/tracking/tracker.py:192-226).
     """
     o = table(spark, sf_dir, "orders")
-    return o.groupBy(F.col("o_orderpriority").alias("category")).agg(
-        F.count("*").alias("product_count"),
-        (dec_sum(F.col("o_totalprice")) / F.count("*")).alias("avg_price"),
-        F.date_format(F.min("o_orderdate"), TS_FMT).alias("first_scraped"),
-        F.date_format(F.max("o_orderdate"), TS_FMT).alias("last_scraped"),
+    return o.groupBy(F.expr("o_orderpriority AS category")).agg(
+        *map(
+            F.expr,
+            (
+                "count(*) AS product_count",
+                f"{dec_sum('o_totalprice')} / count(*) AS avg_price",
+                f"date_format(min(o_orderdate), '{TS_FMT}') AS first_scraped",
+                f"date_format(max(o_orderdate), '{TS_FMT}') AS last_scraped",
+            ),
+        )
     )
 
 
@@ -210,7 +222,7 @@ def lookup_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
         .agg(
             F.count("*").alias("n_customers"),
-            dec_sum(F.col("c_acctbal")).alias("total_acctbal"),
+            F.expr(dec_sum("c_acctbal")).alias("total_acctbal"),
         )
     )
 
@@ -340,7 +352,7 @@ def global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("o_custkey").alias("n_customers"),
         F.min("o_totalprice").alias("min_price"),
         F.max("o_totalprice").alias("max_price"),
-        (dec_sum(F.col("o_totalprice")) / F.count("*")).alias("avg_price"),
+        (F.expr(dec_sum("o_totalprice")) / F.count("*")).alias("avg_price"),
     )
 
 
@@ -365,7 +377,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.least(F.floor(F.col("value") / 50), F.lit(6)).cast("bigint")
     return e.groupBy(bucket.alias("bucket")).agg(
         F.count("*").alias("n_events"),
-        dec_sum(F.col("value")).alias("total_value"),
+        F.expr(dec_sum("value")).alias("total_value"),
     )
 
 
@@ -488,24 +500,23 @@ def customer_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold and SortMergeJoin beyond it — both plan shapes are
     allowed by the plan test.
     """
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "P").select(
+    li = table(spark, sf_dir, "lineitem").selectExpr("l_orderkey", "l_extendedprice", "l_discount")
+    o = table(spark, sf_dir, "orders").filter("o_orderstatus <> 'P'").selectExpr(
         "o_orderkey", "o_custkey"
     )
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    c = table(spark, sf_dir, "customer").selectExpr("c_custkey", "c_name", "c_mktsegment")
     per_order = li.groupBy("l_orderkey").agg(
-        F.sum(rev.cast("decimal(28,6)")).alias("_order_rev")
+        F.expr("sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS _order_rev")
     )
     return (
-        per_order.join(o, per_order.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
+        per_order.join(o, F.expr("l_orderkey = o_orderkey"))
+        .join(c, F.expr("o_custkey = c_custkey"))
         .groupBy("c_custkey", "c_name", "c_mktsegment")
         .agg(
-            F.count("*").alias("n_orders"),
-            F.sum("_order_rev").cast("double").alias("revenue"),
+            F.expr("count(*) AS n_orders"),
+            F.expr("CAST(sum(_order_rev) AS DOUBLE) AS revenue"),
         )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
+        .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
     )
 
@@ -597,7 +608,7 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.grouping("r_name").cast("int").alias("g_region"),
         F.grouping("n_name").cast("int").alias("g_nation"),
         F.count("*").alias("n_customers"),
-        dec_sum(F.col("c_acctbal"), scale=2, precision=28).alias("total_acctbal"),
+        F.expr(dec_sum("c_acctbal", scale=2, precision=28)).alias("total_acctbal"),
     )
     return agg.select(
         F.when(F.col("g_region") == 1, F.lit("(all)")).otherwise(F.col("r_name")).alias("r_name"),
@@ -667,7 +678,7 @@ def priority_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = o.cube("o_orderpriority", "o_orderstatus").agg(
         F.grouping_id().alias("g_id"),
         F.count("*").alias("n_orders"),
-        dec_sum(F.col("o_totalprice"), scale=2, precision=28).alias("total_price"),
+        F.expr(dec_sum("o_totalprice", scale=2, precision=28)).alias("total_price"),
     )
     # grouping_id bit 1 (value 2) = priority rolled up; bit 0 (value 1) = status.
     return agg.select(
@@ -765,7 +776,7 @@ def salted_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(orders, cust, "o_custkey", salt_factor=8)
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_orders"),
-        dec_sum(F.col("o_totalprice")).alias("total_price"),
+        F.expr(dec_sum("o_totalprice")).alias("total_price"),
     )
 
 
@@ -935,14 +946,14 @@ def customer_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile boundaries + a range join.
     """
     o = table(spark, sf_dir, "orders")
-    rev = o.groupBy("o_custkey").agg(dec_sum(F.col("o_totalprice")).alias("revenue"))
+    rev = o.groupBy("o_custkey").agg(F.expr(dec_sum("o_totalprice")).alias("revenue"))
     tiled = rev.withColumn(
         "decile",
         F.ntile(N_DECILES).over(Window.orderBy(F.desc("revenue"), "o_custkey")),
     )
     return tiled.groupBy("decile").agg(
         F.count("*").alias("n_customers"),
-        dec_sum(F.col("revenue")).alias("total_revenue"),
+        F.expr(dec_sum("revenue")).alias("total_revenue"),
         F.min("revenue").alias("min_revenue"),
         F.max("revenue").alias("max_revenue"),
     )
@@ -1191,7 +1202,7 @@ def priority_status_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame
         F.grouping("o_orderpriority").cast("int").alias("g_priority"),
         F.grouping("o_orderstatus").cast("int").alias("g_status"),
         F.count("*").alias("n_orders"),
-        dec_sum(F.col("o_totalprice"), scale=2, precision=28).alias("total_price"),
+        F.expr(dec_sum("o_totalprice", scale=2, precision=28)).alias("total_price"),
     )
     return agg.select(
         F.when(F.col("g_priority") == 1, F.lit("(all)"))
@@ -1653,7 +1664,7 @@ def _revenue_decile_parts(spark: SparkSession, sf_dir: str):
     sketch (single broadcastable row), and per-decile counts — no
     sort, no window anywhere."""
     o = table(spark, sf_dir, "orders")
-    rev = o.groupBy("o_custkey").agg(dec_sum(F.col("o_totalprice")).alias("revenue"))
+    rev = o.groupBy("o_custkey").agg(F.expr(dec_sum("o_totalprice")).alias("revenue"))
     pcts = ", ".join(str(i / 10) for i in range(1, 10))
     bounds = rev.agg(
         F.expr(f"approx_percentile(revenue, array({pcts}), 10000)").alias("bounds")

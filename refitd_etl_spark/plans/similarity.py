@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from ..sources.registry import table
+from ..sources.registry import row_count, table
 from ..sources.tempstore import gate_tmpdir
 from .base import query
 
@@ -124,22 +124,19 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot fold it across the join — compute it once in the 1-row q
     # projection; the per-row expression keeps only the two genuinely
     # row-dependent folds (dot, corpus norm). Bit-identical: same
-    # dot / (SQRT·SQRT) IEEE tree, earlier operator.
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb"), V.norm(F.col("embedding")).alias("_nq")
-    )
-    cand = e.filter(F.col("vec_id") != 0)
+    # dot / (SQRT·SQRT) IEEE tree, earlier operator. The folds are the
+    # SQL text of `V.dot`/`V.norm` (order-pinned left folds).
+    def fold(arr: str) -> str:
+        return f"aggregate({arr}, 0.0D, (x, y) -> x + y)"
+
+    norm = f"sqrt({fold('transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))')})"
+    dot = fold("zip_with(embedding, q_emb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))")
+    q = e.filter("vec_id = 0").selectExpr("embedding AS q_emb", f"{norm} AS _nq")
+    cand = e.filter("vec_id <> 0")
     return (
         cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            (
-                V.dot(F.col("embedding"), F.col("q_emb"))
-                / (V.norm(F.col("embedding")) * F.col("_nq"))
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
+        .selectExpr("vec_id", "label", f"{dot} / ({norm} * _nq) AS cosine")
+        .orderBy(F.desc("cosine"), "vec_id")
         .limit(10)
     )
 
@@ -188,7 +185,7 @@ def embedding_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.skew import guard_if_large
 
-    n_vecs = table(spark, sf_dir, "embeddings").count()  # metadata-only
+    n_vecs = row_count(spark, sf_dir, "embeddings")
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 25 == 0)
     # two-step projection: materialize the 48 sign bits ONCE per row,
     # then slice them into band signatures — CollapseProject keeps the

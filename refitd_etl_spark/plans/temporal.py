@@ -41,12 +41,9 @@ def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     return e.groupBy(
-        F.date_format(F.date_trunc("hour", F.col("ts")), TS_FMT).alias("window_start"),
+        F.expr(f"date_format(date_trunc('hour', ts), '{TS_FMT}') AS window_start"),
         "event_type",
-    ).agg(
-        F.count("*").alias("n_events"),
-        dec_sum(F.col("value")).alias("total_value"),
-    )
+    ).agg(F.expr("count(*) AS n_events"), F.expr(f"{dec_sum('value')} AS total_value"))
 
 
 @query(
@@ -1614,7 +1611,7 @@ def _dim_enrichment_agg(
     )
     return src.join(dim, "user_id").groupBy("c_mktsegment", "event_type").agg(
         F.count("*").alias("n_events"),
-        dec_sum(F.col("value")).alias("total_value"),
+        F.expr(dec_sum("value")).alias("total_value"),
     )
 
 

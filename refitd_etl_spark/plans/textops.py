@@ -44,19 +44,21 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Staged projection: tokenize once, derive all four metrics from the
     materialized array (2× at 100k docs vs inlining the split into each
-    metric; see gopher_rule_funnel for the pathological end of that)."""
+    metric; see gopher_rule_funnel for the pathological end of that).
+    Both stages are SQL text: the same expressions as the Column
+    helpers `TXT.tokens`/`stopword_ratio_toks`/`quality_score_toks`, in
+    a tenth of the py4j round trips."""
     d = parallel_docs(spark, sf_dir)
-    base = d.select(
-        "doc_id", "lang", TXT.tokens(F.lower(F.col("text"))).alias("toks")
-    )
-    toks = F.col("toks")
-    return base.select(
+    base = d.selectExpr("doc_id", "lang", "split(lower(text), ' ') AS toks")
+    denom = "CAST(greatest(size(toks), 1) AS DOUBLE)"
+    return base.selectExpr(
         "doc_id",
         "lang",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        TXT.stopword_ratio_toks(toks, "en").alias("stop_ratio_en"),
-        TXT.quality_score_toks(toks).alias("quality"),
+        "size(toks) AS n_tokens",
+        "size(array_distinct(toks)) AS n_distinct_tokens",
+        f"CAST(size(filter(toks, x -> x IN ({_EN}))) AS DOUBLE) / {denom} AS stop_ratio_en",
+        "least(CAST(size(toks) AS DOUBLE) / 200.0D, 1.0D)"
+        f" * (CAST(size(array_distinct(toks)) AS DOUBLE) / {denom}) AS quality",
     )
 
 

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from refitd_etl_spark.operators.fixtures import bronze_fixture
 from refitd_etl_spark.pipeline import run_pipeline
 
+from .spark_counters import jobs_started
+
 
 @pytest.fixture(scope="module")
 def store(spark, tmp_path_factory):
@@ -154,15 +156,8 @@ def test_backfill_job_budget(spark, tmp_path):
     """One backfill runs the transform once and no dead jobs: no
     re-count over the bronze, no checkpoint before writing a new table,
     no schema-inference read-backs, no broadcast of a lookup table."""
-    sc = spark.sparkContext
-    group = f"backfill-budget-{tmp_path.name}"
-    sc.setJobGroup(group, "backfill job budget", False)
-    try:
+    with jobs_started(spark) as jobs:
         run_pipeline(spark, bronze_fixture(spark), str(tmp_path))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
-    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < len(jobs) <= BACKFILL_JOB_BUDGET
 
 
