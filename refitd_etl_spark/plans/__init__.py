@@ -21,13 +21,18 @@ from . import llmprep  # noqa: E402,F401
 # round in dict order, so queries changed since the last round boundary
 # (817e5b5) sit FIRST, in scripts/changed_queries.py's AST-attributed
 # closure (shared-helper edits propagated). This change set has
-# 170 members, more than the window holds: `sources/registry.table`
-# changed, so every query that reads a table is in it. The queries
-# whose plan code this change alters lead, and the window is saturated
-# with the rest. The dynamic containment test
+# 175 members, more than the window holds: `sources/registry.table`
+# changed, so every query that reads a table is in it. The 41 queries
+# whose plan code the latest change alters lead, and the window is
+# saturated with the rest. The dynamic containment test
 # (tests/test_round5_plan_shapes.py) re-derives the changed set on
 # every pytest run and asserts the window is saturated with it.
 # Changed-set provenance (oracles byte-unchanged):
+# - latest: one Lloyd loop for the coarse and PQ trainers, the
+#   full-corpus k-means and PQ profiles reading the trained artifacts,
+#   the `_km_assign` empty-centroid guard (the similarity module's
+#   queries), and the streaming gates reading `events` through the
+#   registry handle.
 # - the eight bench queries, planned from SQL text; the queries that
 #   call `dec_sum`, which now takes and returns SQL text; the two skew
 #   guards sized from the footer row count (`row_count`); every table
@@ -42,6 +47,47 @@ from . import llmprep  # noqa: E402,F401
 _PRIORITY: tuple[str, ...] = (
     # regenerate with `python scripts/changed_queries.py` after any
     # helper edit
+    "embedding_topk",
+    "embedding_neighbors",
+    "streaming_dim_enrichment",
+    "pq_codebook_drift_audit",
+    "coarse_centroid_drift_audit",
+    "semantic_dedup_clusters",
+    "semantic_dedup_incremental",
+    "pq_codes_serving",
+    "ivf_pq_codes_serving",
+    "pq_codes_append_serving",
+    "pq_trained_codes_serving",
+    "ivf_pq_codes_append_serving",
+    "ivf_pq_trained_store_serving",
+    "embedding_ivf_topk",
+    "ivf_pq_topk",
+    "ivf_recall_report",
+    "embedding_kmeans_clusters",
+    "ivf_kmeans_topk",
+    "embedding_lsh_buckets",
+    "mmr_diversified_topk",
+    "embedding_norm_stats",
+    "embedding_sq8_profile",
+    "embedding_pq_profile",
+    "pq_adc_topk",
+    "pq_adc_rerank_topk",
+    "pq_adc_recall_report",
+    "pq_trained_profile",
+    "pq_sample_train_profile",
+    "batch_semantic_topk",
+    "incremental_topk_refresh",
+    "streaming_hourly_rollup_multibatch",
+    "streaming_hopping_rollup_multibatch",
+    "streaming_event_dedup_multibatch",
+    "streaming_stateful_tracker_multibatch",
+    "streaming_interval_join_multibatch",
+    "streaming_left_interval_join_multibatch",
+    "streaming_hourly_rollup",
+    "streaming_event_dedup",
+    "streaming_hopping_rollup",
+    "streaming_session_windows",
+    "streaming_interval_join",
     "pricing_summary",
     "category_summary",
     "customer_revenue_topk",
@@ -49,8 +95,6 @@ _PRIORITY: tuple[str, ...] = (
     "doc_text_stats",
     "ngram_jaccard_pairs",
     "minhash_lsh_pairs",
-    "embedding_topk",
-    "embedding_neighbors",
     "lookup_join_rollup",
     "global_stats",
     "value_histogram",
@@ -60,15 +104,10 @@ _PRIORITY: tuple[str, ...] = (
     "customer_revenue_deciles",
     "priority_status_grouping_sets",
     "revenue_decile_scalable",
-    "streaming_dim_enrichment",
     "dedup_clusters",
     "dedup_clusters_largestar",
     "dedup_retention_report",
     "cluster_aware_split",
-    "pq_codebook_drift_audit",
-    "coarse_centroid_drift_audit",
-    "semantic_dedup_clusters",
-    "semantic_dedup_incremental",
     "sensor_tag_fanout",
     "sensor_raw_roundtrip",
     "pipeline_end_to_end",
@@ -81,17 +120,6 @@ _PRIORITY: tuple[str, ...] = (
     "curation_event_state",
     "json_store_roundtrip",
     "sensor_response_parse",
-    "pq_codes_serving",
-    "ivf_pq_codes_serving",
-    "pq_codes_append_serving",
-    "pq_trained_codes_serving",
-    "ivf_pq_codes_append_serving",
-    "ivf_pq_trained_store_serving",
-    "embedding_ivf_topk",
-    "ivf_pq_topk",
-    "ivf_recall_report",
-    "embedding_kmeans_clusters",
-    "ivf_kmeans_topk",
     "price_text_parse",
     "language_id_confusion",
     "word_topk",
@@ -105,18 +133,6 @@ _PRIORITY: tuple[str, ...] = (
     "gopher_rule_funnel",
     "tfidf_top_terms",
     "source_overlap_matrix",
-    "embedding_lsh_buckets",
-    "mmr_diversified_topk",
-    "embedding_norm_stats",
-    "embedding_sq8_profile",
-    "embedding_pq_profile",
-    "pq_adc_topk",
-    "pq_adc_rerank_topk",
-    "pq_adc_recall_report",
-    "pq_trained_profile",
-    "pq_sample_train_profile",
-    "batch_semantic_topk",
-    "incremental_topk_refresh",
     "weekly_distinct_sketch_union",
     "variant_fanout",
     "scalar_function_pack",
@@ -179,18 +195,12 @@ _PRIORITY: tuple[str, ...] = (
     "weekly_revenue_growth",
     "props_variant_rollup",
     "user_state_intervals",
-    "streaming_hourly_rollup_multibatch",
-    "streaming_hopping_rollup_multibatch",
-    "streaming_event_dedup_multibatch",
-    "streaming_stateful_tracker_multibatch",
     "first_touch_attribution",
     "event_gap_detection",
     "dau_wau_stickiness",
     "rolling_3h_event_counts",
     "event_debounce",
     "point_in_time_join",
-    "streaming_interval_join_multibatch",
-    "streaming_left_interval_join_multibatch",
     "semantic_search_topk",
     "rag_context_assembly",
     "media_inventory",

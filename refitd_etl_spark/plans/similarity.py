@@ -25,6 +25,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import vectors as V
 from ..sources.registry import row_count, table
@@ -517,11 +518,11 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KMEANS_K = 8
-KMEANS_ITERS = 2
+LLOYD_ITERS = 2  # rounds of every trained level (coarse and PQ)
 
 
 def _kmeans_cent_ctes(src: str = "embeddings") -> tuple[list[str], str]:
-    """The shared CTE chain computing cent0..cent{KMEANS_ITERS}: assign
+    """The shared CTE chain computing cent0..cent{LLOYD_ITERS}: assign
     (argmax cosine, ties on cid) then update (per-dimension
     decimal-exact mean → double). Returns (ctes, last_cent_name).
     Element order and arithmetic mirror the Spark plan.
@@ -542,7 +543,7 @@ def _kmeans_cent_ctes(src: str = "embeddings") -> tuple[list[str], str]:
         FROM {src} WHERE vec_id < {KMEANS_K}
     )"""
     ]
-    for it in range(1, KMEANS_ITERS + 1):
+    for it in range(1, LLOYD_ITERS + 1):
         prev = f"cent{it - 1}"
         ctes.append(f"""assign{it} AS (
         SELECT vec_id, cid FROM (
@@ -562,7 +563,7 @@ def _kmeans_cent_ctes(src: str = "embeddings") -> tuple[list[str], str]:
         ctes.append(f"""cent{it} AS (
         SELECT cid, list(m ORDER BY pos) AS embedding FROM upd{it} GROUP BY cid
     )""")
-    return ctes, f"cent{KMEANS_ITERS}"
+    return ctes, f"cent{LLOYD_ITERS}"
 
 
 def _kmeans_oracle() -> str:
@@ -587,6 +588,9 @@ def _kmeans_oracle() -> str:
     FROM final_assign GROUP BY cid
     """
     )
+
+
+EMPTY_CENTROID_SET = "EMPTY_CENTROID_SET: k-means assignment over zero centroids"
 
 
 def _km_assign(e: DataFrame, cent: DataFrame, with_cos: bool = False) -> DataFrame:
@@ -623,20 +627,25 @@ def _km_assign(e: DataFrame, cent: DataFrame, with_cos: bool = False) -> DataFra
     PRECONDITIONS (vs the retired groupBy/window shapes — pinned in
     tests/test_argmax_semantics.py::test_km_assign_preconditions):
     - `cent` must be non-empty: collect_list over zero centroids still
-      yields one row with an empty `_cents` array, so the fold emits
-      one row per corpus vector with NULL cid (array_max of an empty
-      array) where the old shapes emitted zero rows.
+      yields one row with an empty `_cents` array, where the fold would
+      emit one row per corpus vector with NULL cid (array_max of an
+      empty array). The broadcast row raises `EMPTY_CENTROID_SET`
+      instead (`raise_error`, evaluated once on that one row) — an
+      `embeddings` input without the vec_id < KMEANS_K seed rows fails
+      loudly, never as silent NULL clusters.
     - `e.vec_id` must be unique: the fold is a pure map, so duplicate
       vec_ids pass through one row each where the old groupBy (and
       the oracle's PARTITION BY vec_id) collapsed them to one.
     Every in-repo caller satisfies both (k ≥ 1 seed/trained centroids;
     vec_id is the embeddings table's key).
     """
+    cents = F.array_sort(F.collect_list("_c"))
+    empty = F.raise_error(F.lit(EMPTY_CENTROID_SET))
     cent_row = cent.select(
         F.struct(
             F.col("cid"), F.col("c_emb"), V.norm(F.col("c_emb")).alias("_cn")
         ).alias("_c")
-    ).agg(F.array_sort(F.collect_list("_c")).alias("_cents"))
+    ).agg(F.when(F.size(cents) > 0, cents).otherwise(empty).alias("_cents"))
     best = (
         e.withColumn("_vn", V.norm(F.col("embedding")))
         .crossJoin(F.broadcast(cent_row))
@@ -662,53 +671,63 @@ def _km_assign(e: DataFrame, cent: DataFrame, with_cos: bool = False) -> DataFra
     return best.select(*cols)
 
 
-def _km_update(e: DataFrame, assign: DataFrame) -> DataFrame:
-    ex = e.join(assign, "vec_id").select(
-        "cid", F.posexplode(F.col("embedding")).alias("pos", "val")
+def _lloyd_step(tr, assign, prev, keys, keep_empty):
+    """One Lloyd update: the new centroid of each (*keys, cid) cell is
+    the per-dimension decimal-exact mean → double of the training
+    vectors `assign` put in it (map-side combined per (cell, dim)).
+    `tr` holds (vec_id, *keys, vector) and `prev` (*keys, cid,
+    centroid), each with its vector column last. A cell that received
+    no vector drops out (`keep_empty=False`, the coarse oracle's GROUP
+    BY) or keeps its previous centroid (`keep_empty=True`, the PQ
+    oracle's COALESCE): each oracle encodes its own rule."""
+    vec, cen = tr.columns[-1], prev.columns[-1]
+    cell = [*keys, "cid"]
+    ex = tr.join(assign.select("vec_id", *cell), ["vec_id", *keys]).select(
+        *cell, F.posexplode(F.col(vec)).alias("pos", "val")
     )
-    means = ex.groupBy("cid", "pos").agg(
-        (
-            F.sum(F.col("val").cast("double").cast("decimal(28,12)")).cast("double")
-            / F.count("*")
-        ).alias("m")
-    )
-    return means.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("c_emb")
-    )
+    total = F.sum(F.col("val").cast("double").cast("decimal(28,12)")).cast("double")
+    means = ex.groupBy(*cell, "pos").agg((total / F.count("*")).alias("mu"))
+    dims = F.array_sort(F.collect_list(F.struct("pos", "mu")))
+    upd = means.groupBy(*cell).agg(F.transform(dims, lambda s: s["mu"]).alias("_new"))
+    if keep_empty:
+        return prev.join(upd, cell, "left").select(
+            *cell, F.coalesce(F.col("_new"), F.col(cen)).alias(cen)
+        )
+    return upd.select(*cell, F.col("_new").alias(cen))
+
+
+def _lloyd(tr, cent, keys, assign, keep_empty):
+    """THE Lloyd k-means loop of every trained level: LLOYD_ITERS
+    rounds of `assign(tr, cent)` then `_lloyd_step`, from the seed
+    centroids `cent`, with a localCheckpoint lineage cut per round.
+    The two chains are bindings that differ only where their oracles
+    do — `_km_train` (no group key, `_km_assign` cosine argmax, an
+    empty cluster drops out) and `_pq_train_cb` (keyed by subspace m,
+    `_pq_sub_assign` squared-L2 argmin, an empty cell keeps its
+    centroid); both oracles unroll the same rounds as CTEs. Per round
+    the plan is one broadcast of the centroids, the map-only
+    assignment fold and one (cell × dim)-group mean rollup. At 100 TB
+    training runs on a deterministic sample with this same plan (the
+    band-asserted `pq_sample_train_profile` claim)."""
+    for _ in range(LLOYD_ITERS):
+        step = _lloyd_step(tr, assign(tr, cent), cent, keys, keep_empty)
+        cent = step.localCheckpoint(eager=True)
+    return cent
 
 
 def _km_train(ev: DataFrame) -> DataFrame:
-    """The coarse Lloyd trainer — seed centroids from the first
-    KMEANS_K ids (vec_id < KMEANS_K, cast to double once), then
-    KMEANS_ITERS assign/update iterations with a localCheckpoint
-    lineage cut per iteration. ONE definition shared by
-    `embedding_kmeans_clusters`, `ivf_kmeans_topk`, both semantic-dedup
-    gates, and the trained-centroids artifact of `_pq_trained` (r13 —
-    the r12 code-review fold: five verbatim copies collapsed; the
-    oracle side was already unified in `_kmeans_cent_ctes`, so the
-    Spark side now mirrors it 1:1).
-
-    `ev` is the training slice — (vec_id, embedding) over the corpus,
-    or a filtered base snapshot (`semantic_dedup_incremental` trains on
-    vec_id < SEMDEDUP_BASE only: the versioned-artifact contract). Per
-    iteration the plan is one k-row broadcast, the `_km_assign` argmax
-    (r15: hoisted norms + an exchange-free broadcast array fold — see
-    `_km_assign`'s docstring for the shape and the value-identity
-    argument), and a (k × dim)-group mean
-    rollup. At 100 TB training runs on a deterministic sample with
-    this same plan (the band-asserted `pq_sample_train_profile`
-    claim), so the window shuffle is sample-sized where it matters.
-    """
-    cent = ev.filter(F.col("vec_id") < KMEANS_K).select(
+    """The coarse binding of `_lloyd`, shared by `_pq_trained`'s
+    centroids artifact and both semantic-dedup gates: seed centroids
+    from the first KMEANS_K ids (vec_id < KMEANS_K, cast to double
+    once), assigned by `_km_assign`. `ev` is the training slice —
+    (vec_id, embedding) over the corpus, or a filtered base snapshot
+    (`semantic_dedup_incremental` trains on vec_id < SEMDEDUP_BASE
+    only: the versioned-artifact contract)."""
+    seed = ev.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cid"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("c_emb"),
     )
-    for _ in range(KMEANS_ITERS):
-        assign = _km_assign(ev, cent)
-        cent = _km_update(ev, assign).localCheckpoint(eager=True)
-    return cent
+    return _lloyd(ev, seed, (), _km_assign, keep_empty=False)
 
 
 def _ivf_probes(cent, q):
@@ -794,13 +813,14 @@ def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterations as CTEs, and every accumulation is order-independent
     by construction — assignment is argmax cosine with (cos DESC, cid)
     ties, centroid updates are per-dimension decimal-exact sums divided
-    by counts, avg_cos is a decimal sum. At scale each iteration is one
-    broadcast of k centroids + two shuffles (assign rollup, dimension
-    means); k-means on 100 TB runs on a deterministic sample with the
-    same plan, then assignment is a single broadcast pass.
+    by counts, avg_cos is a decimal sum. The centroids are the
+    `_pq_trained` artifact (`_km_train`, trained once per input and
+    read back), so this plan is one broadcast assignment pass and a
+    k-group rollup; k-means on 100 TB runs on a deterministic sample
+    with the same training plan.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _km_train(e)
+    cent = _read_level(spark, _pq_trained(spark, sf_dir, "centroids"))
     final = _km_assign(e, cent, with_cos=True)
     return final.groupBy("cid").agg(
         F.count("*").alias("n_vectors"),
@@ -901,8 +921,9 @@ def _ivf_kmeans_oracle() -> str:
 
 @query("ivf_kmeans_topk", oracle=_ivf_kmeans_oracle(), survey_ops="J8,kmeans,similarity,iterative")
 def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with TRAINED centroids (round 4): the Lloyd iterations
-    of `embedding_kmeans_clusters` produce the centroids, then the
+    """IVF ANN with TRAINED centroids (round 4): the coarse Lloyd
+    artifact `embedding_kmeans_clusters` reads (`_pq_trained`, trained
+    once per input) supplies the centroids, then the
     standard IVF stages run — assign every vector to its nearest
     trained centroid, probe the query's 2 nearest lists, exact-rank
     inside. This closes the r3 caveat that `embedding_ivf_topk`'s
@@ -912,12 +933,11 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: training runs on a deterministic sample (same plan),
     the assignment `cid` becomes the write-time partition key, and a
-    query reads n_probe/k of the data via partition pruning. Per
-    iteration: one 8-centroid broadcast + two map-side-combined
-    shuffles — nothing here sorts or collects the vector set.
+    query reads n_probe/k of the data via partition pruning. Nothing
+    here sorts or collects the vector set.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    cent = _km_train(e.select("vec_id", "embedding"))
+    cent = _read_level(spark, _pq_trained(spark, sf_dir, "centroids"))
     return _ivf_search(e, cent)
 
 
@@ -1694,6 +1714,8 @@ IVF_PQ_TRAINED_STORE = PQStoreSpec(
 
 # (store spec or trained-artifact kind, input fingerprint) -> path
 _PQ_BUILT: dict[tuple, str] = {}
+# real path of a trained artifact -> the schema it was written with
+_LEVEL_SCHEMA: dict[str, StructType] = {}
 
 
 def _input_fingerprint(sf_dir: str) -> tuple:
@@ -1711,9 +1733,12 @@ def _input_fingerprint(sf_dir: str) -> tuple:
 def _pq_trained(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """Path of a trained index artifact, trained and persisted once per
     input: "centroids" (coarse Lloyd, `_km_train`) or "codebook"
-    (per-subspace Lloyd, `_pq_train_cb`). At 100 TB training is a
-    build-time job on a deterministic sample; nothing downstream pays
-    it again."""
+    (per-subspace Lloyd, `_pq_train_cb`). Every full-corpus consumer —
+    the trained stores, both drift audits, `embedding_kmeans_clusters`,
+    `ivf_kmeans_topk`, `pq_trained_profile` and the full arm of
+    `pq_sample_train_profile` — reads it through `_read_level`. At
+    100 TB training is a build-time job on a deterministic sample;
+    nothing downstream pays it again."""
     key = (kind, _input_fingerprint(sf_dir))
     if key not in _PQ_BUILT:
         e = table(spark, sf_dir, "embeddings")
@@ -1721,10 +1746,17 @@ def _pq_trained(spark: SparkSession, sf_dir: str, kind: str) -> str:
             art = _km_train(e.select("vec_id", "embedding"))
         else:
             art = _pq_train_cb(e)
-        path = f"{gate_tmpdir(f'pq_trained_{kind}_')}/{kind}"
+        path = os.path.realpath(f"{gate_tmpdir(f'pq_trained_{kind}_')}/{kind}")
         art.write.parquet(path)
+        _LEVEL_SCHEMA[path] = art.schema
         _PQ_BUILT[key] = path
     return _PQ_BUILT[key]
+
+
+def _read_level(spark: SparkSession, path: str) -> DataFrame:
+    """A trained artifact, at its own path or a store's link to it,
+    read with the schema it was written with: no inference job."""
+    return spark.read.schema(_LEVEL_SCHEMA[os.path.realpath(path)]).parquet(path)
 
 
 def _pq_centroids(
@@ -1734,11 +1766,11 @@ def _pq_centroids(
     the seed rows, or the store's persisted trained artifact."""
     if spec.coarse == "seed":
         return _seed_centroids(e)
-    return spark.read.parquet(root + "/centroids")
+    return _read_level(spark, root + "/centroids")
 
 
 def _pq_trained_cb_row(spark: SparkSession, root: str) -> DataFrame:
-    return _pq_flat_row(spark.read.parquet(root + "/codebook"))
+    return _pq_flat_row(_read_level(spark, root + "/codebook"))
 
 
 def _pq_encode_batch(
@@ -1948,8 +1980,6 @@ def ivf_pq_codes_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTEs, the _kmeans_cent_ctes pattern). Reference analog J8: pgvector
 # trains its ivfflat lists (src/ai/embeddings.py:464-513).
 
-PQ_TRAIN_ITERS = 2  # Lloyd iterations per subspace (= KMEANS_ITERS)
-
 
 def _pq_train_rows(e: DataFrame) -> DataFrame:
     """Training rows (vec_id, m, v_sub): every corpus vector sliced
@@ -2016,45 +2046,13 @@ def _pq_sub_assign(tr: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_sub_update(tr: DataFrame, assign: DataFrame, prev: DataFrame) -> DataFrame:
-    """Lloyd update per (m, cid): per-dimension decimal-exact mean →
-    double — `_km_update`'s arithmetic keyed by subspace too ({PQ_M} ×
-    {PQ_K} × {PQ_SUB} = 256 groups, map-side combined). A sub-cluster
-    that received no vectors keeps its previous centroid (COALESCE) so
-    the codebook never loses an entry — both engines apply the same
-    rule, so the gate stays deterministic even if a seed cell empties
-    at some SF."""
-    ex = tr.join(assign.select("vec_id", "m", "cid"), ["vec_id", "m"]).select(
-        "m", "cid", F.posexplode(F.col("v_sub")).alias("pos", "val")
-    )
-    means = ex.groupBy("m", "cid", "pos").agg(
-        (
-            F.sum(F.col("val").cast("decimal(28,12)")).cast("double") / F.count("*")
-        ).alias("mu")
-    )
-    upd = means.groupBy("m", "cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mu"))), lambda s: s["mu"]
-        ).alias("c_new")
-    )
-    return prev.join(upd, ["m", "cid"], "left").select(
-        "m", "cid", F.coalesce(F.col("c_new"), F.col("c_sub")).alias("c_sub")
-    )
-
-
 def _pq_train_cb(e: DataFrame) -> DataFrame:
-    """Per-subspace Lloyd k-means: {PQ_TRAIN_ITERS} iterations from the
-    seed sub-codebooks, localCheckpoint lineage cuts per iteration
-    (the `ivf_kmeans_topk` pattern). At 100 TB training runs on a
-    deterministic sample with the same plan — per iteration one
-    16-row broadcast, one map-side-combined argmin rollup, one
-    256-group mean rollup."""
-    tr = _pq_train_rows(e)
-    cb = _pq_seed_cb_d(e)
-    for _ in range(PQ_TRAIN_ITERS):
-        assign = _pq_sub_assign(tr, cb)
-        cb = _pq_sub_update(tr, assign, cb).localCheckpoint(eager=True)
-    return cb
+    """The per-subspace binding of `_lloyd`: every subspace trains in
+    ONE plan, keyed by m, from the seed sub-codebooks, assigned by
+    `_pq_sub_assign` (256 (m, cid, dim) mean groups per round)."""
+    return _lloyd(
+        _pq_train_rows(e), _pq_seed_cb_d(e), ("m",), _pq_sub_assign, keep_empty=True
+    )
 
 
 def _pq_recon_arm(tr: DataFrame, cb: DataFrame, name: str) -> DataFrame:
@@ -2094,7 +2092,7 @@ _PQ_SUB_D2 = f"""
 def _pq_train_ctes(src: str = "embeddings", prefix: str = "pq") -> list[str]:
     """The Lloyd-training iterations unrolled as CTEs (the
     `_kmeans_cent_ctes` pattern, keyed by subspace too), ending at
-    ``{prefix}cb{PQ_TRAIN_ITERS}`` — the trained (m, cid, c_sub)
+    ``{prefix}cb{LLOYD_ITERS}`` — the trained (m, cid, c_sub)
     codebook. ONE definition shared by `pq_trained_profile`'s
     reconstruction oracle, `pq_trained_codes_serving`'s ADC oracle
     (r11), `ivf_pq_trained_store_serving`'s composed oracle (r12), and
@@ -2122,7 +2120,7 @@ def _pq_train_ctes(src: str = "embeddings", prefix: str = "pq") -> list[str]:
         WHERE vec_id < {PQ_K}
     )""",
     ]
-    for it in range(1, PQ_TRAIN_ITERS + 1):
+    for it in range(1, LLOYD_ITERS + 1):
         prev = f"{prefix}cb{it - 1}"
         ctes.append(f"""{prefix}as{it} AS (
         SELECT vec_id, m, cid FROM (
@@ -2192,7 +2190,7 @@ def _pq_train_oracle() -> str:
     """The seed-vs-trained reconstruction profile: the shared training
     CTEs (`_pq_train_ctes`), then the two reconstruction arms."""
     ctes = _pq_train_ctes()
-    for label, cb in (("seed", "pqcb0"), ("trained", f"pqcb{PQ_TRAIN_ITERS}")):
+    for label, cb in (("seed", "pqcb0"), ("trained", f"pqcb{LLOYD_ITERS}")):
         ctes += _pq_recon_ctes(label, cb)
     return (
         "WITH "
@@ -2211,7 +2209,7 @@ def _pq_train_oracle() -> str:
 )
 def pq_trained_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED PQ sub-codebooks (r10): per-subspace Lloyd k-means
-    ({PQ_TRAIN_ITERS} iterations from the seed sub-codebooks — FAISS's
+    ({LLOYD_ITERS} iterations from the seed sub-codebooks — FAISS's
     default PQ training), gated as a seed-vs-trained reconstruction
     profile: one row per codebook with corpus vector count, mean and
     max squared reconstruction error. Lloyd monotonicity guarantees
@@ -2222,19 +2220,20 @@ def pq_trained_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ivf_kmeans_topk` closed IVF's (reference analog J8: pgvector
     trains its ivfflat lists, src/ai/embeddings.py:464-513).
 
-    Scale shape: all {PQ_M} subspaces train in ONE plan (m is a
-    grouping key, not a job loop); per iteration one 16-row broadcast
-    + an argmin rollup + a 256-group mean rollup, localCheckpoint
-    lineage cuts between iterations. At 100 TB training runs on a
-    deterministic sample with the same plan, then encode is a single
-    broadcast pass (`_pq_encode` takes ANY (m, cid, c_sub) codebook
-    through `_pq_flat_row`). Determinism: order-pinned folds,
+    The trained codebook is the `_pq_trained` artifact, trained once
+    per input (all {PQ_M} subspaces in ONE `_lloyd` plan, m a grouping
+    key) and read back here, so a build starts no training job. At
+    100 TB training runs on a deterministic sample with the same plan,
+    then encode is a single broadcast pass (`_pq_encode` takes ANY
+    (m, cid, c_sub) codebook through `_pq_flat_row`). Determinism:
+    order-pinned folds,
     (d2, cid) argmin ties, decimal-exact means/sums with VARCHAR
     bridging on the DuckDB side (plans/base.py contract)."""
     e = table(spark, sf_dir, "embeddings")
     tr = _pq_train_rows(e)
     seed = _pq_recon_arm(tr, _pq_seed_cb_d(e), "seed")
-    trained = _pq_recon_arm(tr, _pq_train_cb(e), "trained")
+    cb = _read_level(spark, _pq_trained(spark, sf_dir, "codebook"))
+    trained = _pq_recon_arm(tr, cb, "trained")
     return seed.unionByName(trained).orderBy("codebook")
 
 
@@ -2291,8 +2290,8 @@ def _pq_sample_train_oracle() -> str:
     ctes += _pq_train_ctes(src="semb", prefix="sp")
     arms = (
         ("seed", "pqcb0"),
-        ("trained_full", f"pqcb{PQ_TRAIN_ITERS}"),
-        ("trained_sample", f"spcb{PQ_TRAIN_ITERS}"),
+        ("trained_full", f"pqcb{LLOYD_ITERS}"),
+        ("trained_sample", f"spcb{LLOYD_ITERS}"),
     )
     for label, cb in arms:
         ctes += _pq_recon_ctes(label, cb)
@@ -2326,15 +2325,17 @@ def pq_sample_train_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round at the gate SF).
 
     Scale shape: the sample predicate is a pure key function at the
-    scan (no shuffle, prunes at the source); both training chains are
-    the `_pq_train_cb` plan — per iteration one 16-row broadcast, one
-    map-side-combined argmin, one 256-group mean rollup — the sample
-    chain on ~half the input rows here and on ~1e-4 of them at 100 TB,
-    which is the entire point being gated."""
+    scan (no shuffle, prunes at the source). trained_full reads the
+    `_pq_trained` codebook artifact; only the sample arm trains, with
+    the same `_pq_train_cb` plan — per iteration one 16-row broadcast,
+    one map-side-combined argmin, one 256-group mean rollup — on ~half
+    the input rows here and on ~1e-4 of them at 100 TB, which is the
+    entire point being gated."""
     e = table(spark, sf_dir, "embeddings")
     tr = _pq_train_rows(e)
     seed = _pq_recon_arm(tr, _pq_seed_cb_d(e), "seed")
-    full = _pq_recon_arm(tr, _pq_train_cb(e), "trained_full")
+    cb = _read_level(spark, _pq_trained(spark, sf_dir, "codebook"))
+    full = _pq_recon_arm(tr, cb, "trained_full")
     samp = _pq_recon_arm(tr, _pq_train_cb(_pq_sample(e)), "trained_sample")
     return seed.unionByName(full).unionByName(samp).orderBy("codebook")
 
@@ -2422,7 +2423,7 @@ def pq_codes_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH "
     + ",\n".join(_pq_train_ctes())
     + ","
-    + _pq_adc_tail(f"pqcb{PQ_TRAIN_ITERS}")
+    + _pq_adc_tail(f"pqcb{LLOYD_ITERS}")
     + """
     SELECT vec_id, label, adc_d2 FROM adc
     ORDER BY adc_d2, vec_id
@@ -2488,7 +2489,7 @@ def ivf_pq_codes_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- fully-trained two-level store (r12, VERDICT r11 item 2+3) --
 #
 # The matrix before this tier: `ivf_kmeans_topk` trains the COARSE
-# level (Lloyd centroids, inline), `pq_trained_codes_serving` trains
+# level (Lloyd centroids), `pq_trained_codes_serving` trains
 # and PERSISTS the FINE level (sub-codebooks beside their codes), and
 # `ivf_pq_codes_append_serving` proves cid x snap composition — but
 # every materialized store still seed-picks its coarse centroids
@@ -2535,7 +2536,7 @@ def _ivf_pq_trained_oracle() -> str:
         + ",\n".join(ctes)
         + ","
         + _pq_adc_tail(
-            f"pqcb{PQ_TRAIN_ITERS}",
+            f"pqcb{LLOYD_ITERS}",
             """AND v.vec_id IN (SELECT a.vec_id FROM tassign a
                                 JOIN tprobes p ON a.cid = p.cid)""",
         )
@@ -2595,7 +2596,7 @@ def _pq_drift_oracle() -> str:
     persisted artifact holds, pinned by the r11 serving gates), then
     one recon arm per snapshot predicate over the corpus rows."""
     ctes = _pq_train_ctes()
-    cb = f"pqcb{PQ_TRAIN_ITERS}"
+    cb = f"pqcb{LLOYD_ITERS}"
     for label, pred in (
         ("base", f"v.vec_id <> 0 AND v.vec_id % {PQ_APPEND_MOD} <> 0"),
         ("delta", f"v.vec_id <> 0 AND v.vec_id % {PQ_APPEND_MOD} = 0"),
@@ -2638,7 +2639,7 @@ def pq_codebook_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     two global rollups — no shuffle wider than the rollups, no
     training iteration, cost O(|corpus|) with the delta arm O(|delta|)
     when run per-ingest against the snap partition alone."""
-    cb = spark.read.parquet(_pq_trained(spark, sf_dir, "codebook"))
+    cb = _read_level(spark, _pq_trained(spark, sf_dir, "codebook"))
     e = table(spark, sf_dir, "embeddings")
     base = _pq_recon_arm(_pq_train_rows(_pq_append_base(e)), cb, "base")
     delta = _pq_recon_arm(_pq_train_rows(_pq_append_delta(e)), cb, "delta")
@@ -2676,7 +2677,7 @@ def pq_drift_delta_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the retrain/reindex number at the cadence production
     actually runs it."""
     root = _pq_store(spark, sf_dir, IVF_PQ_TRAINED_STORE)
-    cb = spark.read.parquet(root + "/codebook")
+    cb = _read_level(spark, root + "/codebook")
     delta_ids = (
         spark.read.parquet(root + "/codes")
         .filter(F.col("snap") == 1)
@@ -2787,7 +2788,7 @@ def coarse_centroid_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The audit consumes only the winning cosine: the max of struct
     # (cos, -cid) carries the max cos, NaN ordered largest either way
     # (tests/test_argmax_semantics.py).
-    pcent = spark.read.parquet(_pq_trained(spark, sf_dir, "centroids"))
+    pcent = _read_level(spark, _pq_trained(spark, sf_dir, "centroids"))
     e = table(spark, sf_dir, "embeddings")
     arms = []
     for name, batch in (("base", _pq_append_base(e)), ("delta", _pq_append_delta(e))):
@@ -3058,9 +3059,12 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     `cid` — never all-pairs; per-cluster cost is Σ|c_i|², bounded by
     the clustering granularity, so at 100 TB k scales with the corpus
     (k ≈ n/target_cluster_size keeps each cluster's quadratic term
-    flat) and clusters process independently in parallel. Centroid
-    build is the proven `embedding_kmeans_clusters` job (broadcast k
-    centroids per Lloyd iteration); assignment is one broadcast pass.
+    flat) and clusters process independently in parallel. Centroids
+    are trained inline by `_km_train` (broadcast k centroids per Lloyd
+    round) rather than read from the `_pq_trained` artifact, whose
+    scan would add columns to the pruned embeddings scans
+    (tests/test_round6_plan_shapes.py); assignment is one broadcast
+    pass.
     SCALE.md records BOTH regimes at 20×: fixed k=8 blows up 64.6×
     (the Σ|c_i|² term growing as n²/k — the measured warning), while
     the same composition with k∝N (k=160) runs 23.4s vs 437s — the

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.registry import NANOS_KEY, _handle, row_count
+
 # r15 optimization (guide §2): streaming state machinery costs are
 # per-partition-per-store-per-batch (store load + iterate + commit +
 # checkpoint file I/O), NOT per-row — an empty watermark-finalizer
@@ -49,35 +51,24 @@ def scaled_state_partitions(spark: SparkSession, sf_dir: str):
     first-batch planning, so the override must span start()+await —
     run the whole gate inside this block; the session default is
     restored on exit so downstream BATCH queries are untouched. The
-    row count is a parquet metadata-only job (no column read).
+    row count is the registry's footer count (no Spark job), and
+    shuffle.partitions is the only conf this block touches.
     Partitioning never changes values — the gates' oracle hashes are
     partition-count-independent.
     """
     key = "spark.sql.shuffle.partitions"
-    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
     prev = spark.conf.get(key)
-    prev_nanos = spark.conf.get(nanos_key, None)
     override = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
     try:
         if override:
             n = int(override)
         else:
-            # same legacy-nanos branch as stream_events: round-1 testdata
-            # events carry TIMESTAMP(NANOS) and fail schema inference
-            # without it (restored below — VERDICT r15 item 7: this
-            # context manager's contract is restore-on-exit for EVERY
-            # conf it touches, not just shuffle.partitions)
-            spark.conf.set(nanos_key, "true")
-            n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+            n_rows = row_count(spark, sf_dir, "events")
             n = max(2, -(-n_rows // STREAM_STATE_ROWS_PER_PARTITION))
         spark.conf.set(key, str(n))
         yield n
     finally:
         spark.conf.set(key, prev)
-        if prev_nanos is None:
-            spark.conf.unset(nanos_key)
-        else:
-            spark.conf.set(nanos_key, prev_nanos)
 
 
 def await_gate(q, timeout: int = 300) -> None:
@@ -100,22 +91,23 @@ def await_gate(q, timeout: int = 300) -> None:
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream over the events table. The stream schema is probed
-    from a static read so both testdata generations work: TIMESTAMP(NANOS)
-    files surface `ts` as long (nanos) and get the nanos → micros
-    truncation, micros files stream as a plain timestamp (same branch as
-    the batch registry). In production this is a Kafka/queue source with
-    the same downstream plan."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    """File-stream over the events table, with the schema and the
+    TIMESTAMP(NANOS) flag of its registry handle (no inference job), so
+    both testdata generations work: a NANOS file streams `ts` as long
+    (nanos) under `nanosAsLong` and gets the nanos → micros truncation,
+    a micros file streams as a plain timestamp and leaves the session
+    conf alone (the batch registry's branch). In production this is a
+    Kafka/queue source with the same downstream plan."""
+    h = _handle(spark, sf_dir, "events")
     raw = (
-        spark.readStream.schema(static.schema)
+        spark.readStream.schema(h.schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(static.schema["ts"].dataType, T.LongType):
+    if h.nanos:
+        spark.conf.set(NANOS_KEY, "true")
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(static.schema["ts"].dataType, T.TimestampNTZType):
+    elif isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
         # watermarks require TIMESTAMP (LTZ); the session timezone is
         # pinned to UTC so this cast preserves wall-clock values exactly
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))

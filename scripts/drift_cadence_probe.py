@@ -118,7 +118,7 @@ def main() -> None:
         .select("vec_id", "embedding")
         .write.parquet(batch_dir)
     )
-    cbn = spark.read.parquet(store + "/codebook")
+    cbn = sim._read_level(spark, store + "/codebook")
 
     def _batch_audit():
         rows = spark.read.parquet(batch_dir)
@@ -139,7 +139,7 @@ def main() -> None:
     ckpt()
 
     # the COARSE gate's batch-table cadence arm (the r15 addition)
-    pcent = spark.read.parquet(store + "/centroids")
+    pcent = sim._read_level(spark, store + "/centroids")
 
     def _coarse_batch_audit():
         rows = spark.read.parquet(batch_dir)

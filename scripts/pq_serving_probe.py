@@ -93,7 +93,7 @@ def main() -> None:
         out[f"append_build_{tag}_s"] = round(time.perf_counter() - t0, 3)
         ckpt()
 
-    # r10: trained-codebook cost (per-subspace Lloyd, PQ_TRAIN_ITERS
+    # r10: trained-codebook cost (per-subspace Lloyd, LLOYD_ITERS
     # iterations) — training scales with rows, which is exactly why
     # the 100 TB story trains on a deterministic sample; the probe
     # quantifies the slope the sample avoids.
@@ -120,10 +120,10 @@ def main() -> None:
 
     # r11: SAMPLE-trained codebook (VERDICT r10 item 5 — makes the
     # "at 100 TB training runs on a deterministic sample" docstring
-    # executable): seed from the full corpus, run the SAME Lloyd plan
-    # over a deterministic md5-bucket ~10% sample, then measure the
-    # FULL-corpus reconstruction error of sample-trained vs
-    # full-trained. The band asserted here is the claim: sampling the
+    # executable): seed from the full corpus, run the SAME Lloyd loop
+    # (`_lloyd`, bound as `_pq_train_cb` binds it) over a deterministic
+    # md5-bucket ~10% sample, then measure the FULL-corpus
+    # reconstruction error of sample-trained vs full-trained. The band asserted here is the claim: sampling the
     # training set costs almost nothing in codebook quality while the
     # training job reads ~1/10 of the rows.
     e_full = _table(spark, sf_dir, "embeddings")
@@ -132,22 +132,22 @@ def main() -> None:
         .cast("long") % 10 == 0
     )
     out["train_sample_rows"] = sample.count()
-    tr_sample = sim._pq_train_rows(sample)
-    cb_sample = sim._pq_seed_cb_d(e_full)
     t0 = time.perf_counter()
-    for _ in range(sim.PQ_TRAIN_ITERS):
-        a_s = sim._pq_sub_assign(tr_sample, cb_sample)
-        cb_sample = sim._pq_sub_update(tr_sample, a_s, cb_sample).localCheckpoint(
-            eager=True
-        )
+    cb_sample = sim._lloyd(
+        sim._pq_train_rows(sample),
+        sim._pq_seed_cb_d(e_full),
+        ("m",),
+        sim._pq_sub_assign,
+        keep_empty=True,
+    )
     out["pq_train_sample_s"] = round(time.perf_counter() - t0, 3)
     tr_full = sim._pq_train_rows(e_full)
     mse = {}
     # the full-trained codebook is read BACK from the store built
     # above — measuring the persisted artifact, and never paying the
     # training job twice in one probe run (r11 code review)
-    cb_full = spark.read.parquet(
-        sim._pq_store(spark, sf_dir, sim.PQ_TRAINED_CODES) + "/codebook"
+    cb_full = sim._read_level(
+        spark, sim._pq_store(spark, sf_dir, sim.PQ_TRAINED_CODES) + "/codebook"
     )
     for name, cb in (
         ("seed", sim._pq_seed_cb_d(e_full)),
@@ -244,7 +244,7 @@ def main() -> None:
         .select("vec_id", "embedding")
         .write.parquet(batch_dir)
     )
-    cbn = spark.read.parquet(store + "/codebook")
+    cbn = sim._read_level(spark, store + "/codebook")
 
     def _batch_audit():
         rows = spark.read.parquet(batch_dir)
@@ -272,7 +272,7 @@ def main() -> None:
     # from the store artifact, norms hoisted exactly as the registered
     # gate hoists them, and the profile row must equal the full
     # audit's delta row bit-for-bit.
-    pcent = spark.read.parquet(store + "/centroids")
+    pcent = sim._read_level(spark, store + "/centroids")
 
     def _coarse_batch_audit():
         rows = spark.read.parquet(batch_dir)

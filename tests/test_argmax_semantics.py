@@ -170,23 +170,27 @@ def test_km_assign_preconditions(spark):
     silent semantic change.
 
     1. EMPTY centroid set: collect_list still yields one row with an
-       empty array, so the fold emits one row per corpus vector with
-       NULL cid (array_max of empty = NULL) where the old shapes
-       emitted zero rows.
+       empty array, where the fold would emit one row per corpus
+       vector with NULL cid (array_max of empty = NULL) and the old
+       shapes emitted zero rows. The broadcast row raises the named
+       EMPTY_CENTROID_SET error instead.
     2. DUPLICATE vec_id: the fold is a pure map — duplicates pass
        through one row each where the old groupBy collapsed them.
     """
-    from refitd_etl_spark.plans.similarity import _km_assign
+    import pytest
+
+    from refitd_etl_spark.plans.similarity import EMPTY_CENTROID_SET, _km_assign
 
     e = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
     cent_schema = "cid long, c_emb array<double>"
 
-    # 1. empty centroids → one row per vector, NULL cid
+    # 1. empty centroids → the named error, never NULL-cid rows
     empty_cent = spark.createDataFrame([], cent_schema)
-    out = _km_assign(e, empty_cent).collect()
-    assert len(out) == 2 and all(r.cid is None for r in out), out
+    with pytest.raises(Exception) as err:
+        _km_assign(e, empty_cent).collect()
+    assert EMPTY_CENTROID_SET in str(err.value), err.value
 
     # 2. duplicate vec_id → one output row PER input row (no collapse)
     dup = spark.createDataFrame(

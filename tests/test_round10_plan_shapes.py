@@ -54,10 +54,10 @@ def test_pq_training_sse_is_monotone_per_iteration(spark, sf_dir):
     from pyspark.sql import functions as F2
 
     from refitd_etl_spark.plans.similarity import (
-        PQ_TRAIN_ITERS,
+        LLOYD_ITERS,
+        _lloyd_step,
         _pq_seed_cb_d,
         _pq_sub_assign,
-        _pq_sub_update,
         _pq_train_rows,
     )
     from refitd_etl_spark.sources.registry import table
@@ -66,14 +66,16 @@ def test_pq_training_sse_is_monotone_per_iteration(spark, sf_dir):
     tr = _pq_train_rows(e)
     cb = _pq_seed_cb_d(e)
     sses = []
-    for _ in range(PQ_TRAIN_ITERS + 1):
+    for _ in range(LLOYD_ITERS + 1):
         assign = _pq_sub_assign(tr, cb)
         sses.append(
             assign.agg(
                 F2.sum(F2.col("d2").cast("decimal(28,12)")).alias("sse")
             ).collect()[0]["sse"]
         )
-        cb = _pq_sub_update(tr, assign, cb).localCheckpoint(eager=True)
+        cb = _lloyd_step(tr, assign, cb, ("m",), keep_empty=True).localCheckpoint(
+            eager=True
+        )
     assert all(a >= b for a, b in zip(sses, sses[1:])), sses
     assert sses[-1] < sses[0], sses  # training actually moved
 

@@ -8,18 +8,20 @@ DYNAMIC test in test_round5_plan_shapes.py.
 
 from __future__ import annotations
 
+import inspect
 import re
 
 from refitd_etl_spark.plans import ALL_QUERIES
 
 def test_km_train_fold_consumers_share_one_lloyd_definition():
     """The r13 `_km_train` fold (r12 code-review debt / VERDICT r12
-    item 2): the coarse-Lloyd seed/assign/update/localCheckpoint block
-    must exist ONCE — no consumer retains an inline copy. Pinned
-    structurally (the seed-select filter literal appears exactly once
-    in similarity.py, inside `_km_train`) so a sixth copy cannot creep
-    back in; behavior is pinned by the five consumers' unchanged DuckDB
-    oracles (`test_oracle_parity`), which the fold did not touch."""
+    item 2), since extended to ONE Lloyd loop for both trained levels:
+    the coarse seed-select must exist ONCE (inside `_km_train`) and the
+    assign/update/localCheckpoint loop ONCE (inside `_lloyd`, which the
+    coarse and the PQ chains both bind) — no consumer or chain retains
+    an inline copy. Pinned structurally so a copy cannot creep back in;
+    behavior is pinned by the consumers' unchanged DuckDB oracles
+    (`test_oracle_parity`), which the folds did not touch."""
     from pathlib import Path
 
     import refitd_etl_spark.plans.similarity as sim
@@ -30,9 +32,17 @@ def test_km_train_fold_consumers_share_one_lloyd_definition():
         f"expected exactly one coarse-Lloyd seed-select (inside "
         f"_km_train); found {len(seeds)}"
     )
-    # and the loop itself: one KMEANS_ITERS-driven assign/update loop
-    loops = re.findall(r"for _ in range\(KMEANS_ITERS\)", src)
+    # and the loop itself: one LLOYD_ITERS-driven assign/update loop,
+    # and no other iteration constant or update body beside it
+    loops = re.findall(r"for _ in range\(LLOYD_ITERS\)", src)
     assert len(loops) == 1, f"expected one Lloyd loop, found {len(loops)}"
+    assert not re.search(
+        r"\b(KMEANS_ITERS|PQ_TRAIN_ITERS|_km_update|_pq_sub_update)\b", src
+    )
+    # both chains are bindings of that loop, with no loop of their own
+    for chain in (sim._km_train, sim._pq_train_cb):
+        body = inspect.getsource(chain)
+        assert "_lloyd(" in body and "localCheckpoint" not in body, body
 
 
 def test_delta_drift_arm_prunes_to_the_snap_partition(spark, sf_dir):

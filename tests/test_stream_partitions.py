@@ -26,15 +26,15 @@ def test_derived_from_event_rows_and_restores(spark, sf_dir):
 
 
 def test_restores_nanos_as_long(spark, sf_dir):
-    """VERDICT r15 item 7: the metadata-count branch sets
-    spark.sql.legacy.parquet.nanosAsLong as a side effect; the context
-    manager must restore it (unset if previously unset) alongside
-    shuffle.partitions — restore-on-exit applies to every conf it
-    touches."""
+    """VERDICT r15 item 7: the context manager must leave
+    spark.sql.legacy.parquet.nanosAsLong as it found it. The events
+    row count now comes from the registry's parquet footers, so the
+    conf is never touched: unchanged inside the block and after it,
+    whether the caller had it unset or pinned."""
     nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
     prev = spark.conf.get(nanos_key, None)
     with scaled_state_partitions(spark, sf_dir):
-        assert spark.conf.get(nanos_key) == "true"
+        assert spark.conf.get(nanos_key, None) == prev
     assert spark.conf.get(nanos_key, None) == prev
     # and when the caller had it pinned, the pinned value survives
     spark.conf.set(nanos_key, "true")
@@ -47,6 +47,33 @@ def test_restores_nanos_as_long(spark, sf_dir):
             spark.conf.unset(nanos_key)
         else:
             spark.conf.set(nanos_key, prev)
+
+
+def test_stream_events_leaves_nanos_conf_on_micros_file(spark, sf_dir, tmp_path):
+    """`stream_events` takes its schema and TIMESTAMP(NANOS) flag from
+    the events registry handle: on a micros file it sets no conf (and
+    runs no schema-inference job), and `ts` streams as a timestamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from refitd_etl_spark.streaming.freshness import stream_events
+
+    from .spark_counters import jobs_started
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    micros = pa.timestamp("us", tz=t.schema.field("ts").type.tz)
+    pq.write_table(t.set_column(i, "ts", t["ts"].cast(micros)), tmp_path / "events.parquet")
+    sf_dir = str(tmp_path)
+    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(nanos_key, None)
+    stream_events(spark, sf_dir)  # memoizes the handle
+    with jobs_started(spark) as jobs:
+        df = stream_events(spark, sf_dir)
+    assert jobs == []
+    assert spark.conf.get(nanos_key, None) == prev
+    assert isinstance(df.schema["ts"].dataType, T.TimestampType), df.schema
 
 
 def test_restores_on_error(spark, sf_dir):
